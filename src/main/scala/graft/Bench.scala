@@ -171,8 +171,7 @@ object Bench {
       // skip removed the fixed no-data batch whose cost was partition-
       // independent, leaving per-partition state-store open/commit as
       // the dominant term
-      .config("spark.graft.streamDrainPartitions",
-        sys.env.getOrElse("SPARK_GRAFT_DRAINP", "8"))
+      .config("spark.graft.streamDrainPartitions", "8")
       // throwaway sink/checkpoint scratch on tmpfs: the lifecycle rows
       // (pipeline_*, stream_*, ingest roundtrips) are bounded by local-disk
       // fsync latency, which is bench-box environment, not engine cost
@@ -189,10 +188,6 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     LogHygiene.quietKnownBenign()
-    // diagnostic toggle: measure AQE's per-stage materialization overhead
-    // on small-SF one-shot runs (unset = Spark default, AQE on)
-    sys.env.get("SPARK_GRAFT_AQE")
-      .foreach(v => spark.conf.set("spark.sql.adaptive.enabled", v))
     // JVM/codegen/file-listing warmup so the first timed query isn't charged
     // for session startup (round-2 bench showed 3.8 s vs 0.15 s steady-state).
     // a12_distinct_days: a lineitem scan+shuffle with NO memoized mart —
@@ -203,8 +198,8 @@ object Bench {
     SparkEntry.queries.get("a12_distinct_days")
       .foreach(fn => try consume(fn(spark, sfDir)) catch { case _: Throwable => })
     // warmup failures must not kill the run BUT must be LOUD: a swallowed
-    // mid-warmup throw silently skips every remaining twin and the first
-    // timed rows absorb 1-3 s of Janino/JIT — an artifact that reads as an
+    // mid-warmup throw silently skips every remaining warmup row and the
+    // first timed rows absorb 1-3 s of Janino/JIT — an artifact that reads as an
     // engine regression with no host-probe signal to exonerate it
     def warm(what: String)(body: => Unit): Unit =
       try body catch { case e: Throwable =>
@@ -431,7 +426,10 @@ object Bench {
         // bench_last.json — the r17 round lost its entire per-query PERF
         // table to a truncated capture, so the file copies are the
         // authoritative artifact and must be all-or-nothing
-        val tmp = pth.resolveSibling(pth.getFileName.toString + ".tmp")
+        // (per-process tmp name: two concurrent runs writing the same
+        // artifact path must not overwrite each other's tmp file)
+        val tmp = pth.resolveSibling(
+          s"${pth.getFileName}.${ProcessHandle.current().pid()}.tmp")
         java.nio.file.Files.write(tmp, (line + "\n").getBytes("UTF-8"))
         try java.nio.file.Files.move(tmp, pth,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,

@@ -258,8 +258,7 @@ object ScaleProbe {
     */
   def scanLayout(spark: SparkSession, sfDir: String,
                  files: Int = 16, targetRows: Long = 1200000L): (Double, Double) = {
-    val scratch = spark.conf.getOption("spark.graft.scratchRoot")
-      .getOrElse("/tmp") + "/graft_scanlayout"
+    val scratch = CacheRegistry.scratchRoot(spark) + "/graft_scanlayout"
     // documents.text included: a short-string + numeric projection decodes
     // so fast the ~0.2 s job floor hides the parallelism; the text column
     // makes the scan stage genuinely CPU-bound, the shape of every

@@ -181,8 +181,4 @@ object Ingest {
     */
   def idempotentAppend(newRows: DataFrame, existing: DataFrame): DataFrame =
     newRows.join(existing.select("event_hash"), Seq("event_hash"), "left_anti")
-
-  /** K3 — inserted-count accounting (load/postgis.py:129-146). */
-  def countsByFileDate(df: DataFrame): DataFrame =
-    df.groupBy("file_date").agg(count(lit(1)).as("n"))
 }

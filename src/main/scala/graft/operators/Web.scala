@@ -35,10 +35,6 @@ object Web {
   private def afterScheme(u: Column): Column =
     regexp_replace(u, "^[A-Za-z][A-Za-z0-9+.-]*://", "")
 
-  /** Lowercased scheme of the URL ('' when absent). */
-  def urlScheme(u: Column): Column =
-    lower(regexp_extract(u, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-
   /** Authority component (host[:port]) of a scheme-relative remainder:
     * the leading run up to the first `/`, `?` or `#` — the non-regex
     * equivalent of extracting `^([^/?#]+)`. */
@@ -54,10 +50,6 @@ object Web {
   def urlHost(u: Column): Column =
     regexp_replace(lower(authority(afterScheme(substring_index(u, "#", 1)))),
       "^www\\.|:[0-9]+$", "")
-
-  /** Port as a string ('' when absent). */
-  def urlPort(u: Column): Column =
-    regexp_extract(authority(afterScheme(substring_index(u, "#", 1))), ":([0-9]+)$", 1)
 
   /** The parsed public-suffix snapshot, by PSL rule class.
     *

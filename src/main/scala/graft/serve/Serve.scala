@@ -452,14 +452,6 @@ object Serve {
   def legendMonotonic(l: Legend): Boolean =
     l.breaks.length >= 2 && l.breaks.sliding(2).forall(p => p(1) > p(0))
 
-  /** /api/validate bounds-vs-geo check: bbox ratio ≤ 50 (main.py:1822-1846). */
-  def validateBboxRatio(m: ShapeMetrics): Boolean = m.bboxRatio <= 50.0
-
-  /** /api/validate points smoke: the page respects its limit (main.py:1848-1861). */
-  def validatePointsSmoke(facts: DataFrame, from: LocalDate, to: LocalDate,
-                          limit: Int = 200): Boolean =
-    points(facts, from, to, None, limit)._1.size <= limit
-
   /** /api/validate consistency triple (main.py:1733-1790): totals ==
     * timeseries sum == per-entity (choropleth) sum under any filter combo.
     */

@@ -612,9 +612,8 @@ object StreamingJobs {
     // so their fsync latency is environment, not engine, cost — same
     // contract as drainToMemory. numRowsTotal is partition-count
     // independent, so the drain-parallelism wrap is metric-safe.
-    val root = spark.conf.getOption("spark.graft.scratchRoot")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val ckpt = s"$root/graft_state_metrics_${memRuns.incrementAndGet()}"
+    val ckpt = s"${graft.CacheRegistry.scratchRoot(spark)}/graft_state_metrics_" +
+      memRuns.incrementAndGet()
     // the wrap covers the WHOLE drain: the stream thread reads the
     // shuffle-partition conf while planning each batch
     val q = withDrainParallelism(spark) {
@@ -740,8 +739,7 @@ object StreamingJobs {
                     finalWatermarkFlush: Boolean = true): DataFrame = {
     val spark = stream.sparkSession
     val name = s"${prefix}_${memRuns.incrementAndGet()}"
-    val root = spark.conf.getOption("spark.graft.scratchRoot").getOrElse("/tmp")
-    val dir = s"$root/graft_drain_$name"
+    val dir = s"${graft.CacheRegistry.scratchRoot(spark)}/graft_drain_$name"
     val hp = new org.apache.hadoop.fs.Path(dir)
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(hp)) fs.delete(hp, true)

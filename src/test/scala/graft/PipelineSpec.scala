@@ -256,6 +256,58 @@ class PipelineSpec extends AnyFunSuite {
     assert(p.checkDay(day).isEmpty)
   }
 
+  test("crash heal, enriched ahead of curated: a re-run re-inserts the rows " +
+    "curated lacks once and does not re-enrich them") {
+    // Own root: this test doctors the curated store.
+    val dir2 = Files.createTempDirectory("graft_pipeline_enriched_ahead")
+    val root = dir2.resolve("warehouse").toString
+    val p = new Pipeline(spark, root, municipios, biomas, Some(ucs), Some(tis))
+    val day = LocalDate.parse("2024-02-02")
+    val csv = writeDailyCsv(dir2, day)
+    assert(p.runDay(csv, day)("inserted") == 5)
+
+    // Simulate a crashed run whose enriched append landed while its curated
+    // append did not (the two writes run concurrently): rewrite the curated
+    // partition without two of its rows.
+    val part = s"$root/curated/file_date=$day"
+    val curated0 = spark.read.parquet(part)
+    val kept = curated0.orderBy("event_hash").limit(3).collect()
+    val lost = curated0.orderBy("event_hash").collect().drop(3).map(_.getAs[String]("event_hash"))
+    spark.createDataFrame(java.util.Arrays.asList(kept: _*), curated0.schema)
+      .write.mode("overwrite").parquet(part)
+    assert(spark.read.parquet(s"$root/curated").count() == 3)
+    assert(spark.read.parquet(s"$root/enriched").count() == 5)
+
+    val again = p.runDay(csv, day)
+    assert(again("inserted") == 2)
+    val curated = spark.read.parquet(s"$root/curated")
+    assert(curated.count() == 5)
+    assert(curated.select("event_hash").distinct().count() == 5)
+    assert(curated.filter(col("event_hash").isin(lost: _*)).count() == 2)
+    val enriched = spark.read.parquet(s"$root/enriched")
+    assert(enriched.count() == 5)
+    assert(enriched.select("event_hash").distinct().count() == 5)
+    assert(p.checkDay(day).isEmpty)
+  }
+
+  test("inParallel: a body blocked past the deadline fails the call within " +
+    "about one deadline and is interrupted") {
+    val interrupted = new java.util.concurrent.CountDownLatch(3)
+    def blocked(): Unit =
+      try Thread.sleep(60000)
+      catch { case _: InterruptedException => interrupted.countDown() }
+    val t0 = System.nanoTime()
+    // three blocked bodies: awaits that each got a fresh limit would take 3 s
+    intercept[java.util.concurrent.TimeoutException] {
+      Pipeline.inParallel(Seq(() => blocked(), () => blocked(), () => blocked()),
+        limit = scala.concurrent.duration.Duration(1, java.util.concurrent.TimeUnit.SECONDS))
+    }
+    val elapsed = (System.nanoTime() - t0) / 1e9
+    assert(elapsed < 2.5, s"inParallel took ${elapsed}s past a 1 s deadline")
+    assert(interrupted.await(10, java.util.concurrent.TimeUnit.SECONDS),
+      "the blocked bodies were not interrupted")
+  }
+
   test("checked-flags read path: reenrichDay restores a late-arriving dimension") {
     val (p, root, dir2) = fixture
     // simulate "UC dim arrived late": null the UC outputs of day 1 and clear its flag

@@ -821,4 +821,18 @@ class PlanAuditSpec extends AnyFunSuite {
       s"expected exactly one corpus shuffle:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"sup must be a top-1 merge:\n$p")
   }
+
+  test("warmup rows are real query rows") {
+    val names = Queries.queries.keySet
+    val missing = (Queries.warmupRows ++ Queries.warmupShuffledJoinRows).filterNot(names)
+    assert(missing.isEmpty, s"warmup names with no query row: $missing")
+  }
+
+  test("warmupPlans runs its rows over the snapshots without throwing") {
+    // own child session: the warmup's memoized snapshot marts are evicted
+    // afterwards without touching the shared session's entries
+    val s = SparkEntry.configure(spark.newSession())
+    try Queries.warmupPlans(s, sf)
+    finally { CacheRegistry.unpersistAll(s, blocking = true); () }
+  }
 }

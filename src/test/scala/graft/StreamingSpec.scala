@@ -60,7 +60,7 @@ class StreamingSpec extends AnyFunSuite {
     // the drain's sink+checkpoint live under scratchRoot until the host's
     // quiescent point; unpersistAll must remove them (ADVICE r10: a long
     // tmpfs bench session otherwise accumulates them in RAM)
-    val root = spark.conf.getOption("spark.graft.scratchRoot").getOrElse("/tmp")
+    val root = CacheRegistry.scratchRoot(spark)
     val before = new java.io.File(root).listFiles()
       .filter(_.getName.startsWith("graft_drain_clean_probe")).toSeq
     assert(before.nonEmpty, s"expected a drain scratch dir under $root")
