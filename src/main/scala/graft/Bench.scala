@@ -182,9 +182,7 @@ object Bench {
       // is, and every consumer stage then schedules that many tasks
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.ui.enabled", "false")
-      // static conf: the default 100-entry generated-class cache thrashes on
-      // a 70-query session — compiled classes must survive the whole run
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.codegen.cache.maxEntries", SparkEntry.CodegenCacheMaxEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     LogHygiene.quietKnownBenign()

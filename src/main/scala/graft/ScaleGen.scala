@@ -53,6 +53,7 @@ object ScaleGen {
         .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", SparkEntry.CodegenCacheMaxEntries)
         .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     val SHIFT = 1000000000L

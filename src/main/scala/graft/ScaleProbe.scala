@@ -48,7 +48,7 @@ object ScaleProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.sql.codegen.cache.maxEntries", SparkEntry.CodegenCacheMaxEntries)
       .getOrCreate()
     SparkEntry.configure(spark) // ANSI off, UTC, nanosAsLong (old testdata)
     spark.sparkContext.setLogLevel("WARN")

@@ -9,6 +9,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** `spark.sql.codegen.cache.maxEntries` for the engine's own mains
+    * (Bench, Verify, ScaleProbe, ScaleGen). A static conf, so it goes on
+    * the session builder. Spark's default of 100 generated classes is
+    * smaller than one pipeline day's working set (~128 distinct classes),
+    * so the cache evicts classes it is about to need: in one day step 141
+    * of 146 compiles were byte-identical recompiles. */
+  val CodegenCacheMaxEntries = 5000
+
   /** Session settings every entry point needs: ANSI off (the reference's
     * semantics are permissive — casts/parses yield NULL on failure, e.g.
     * `coalesce(view_ts::date, file_date)` in sql/marts/10_*.sql:38), UTC,

@@ -102,6 +102,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", SparkEntry.CodegenCacheMaxEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     LogHygiene.quietKnownBenign()

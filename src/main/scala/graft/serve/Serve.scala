@@ -3,23 +3,35 @@ package graft.serve
 import java.sql.Date
 import java.time.LocalDate
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-import graft.functions.{GeoFunctions, TextFunctions}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.TextFunctions
 import graft.geo.{Geo, PolyUnion}
+import graft.pipeline.Pipeline
 
 /** The serving layer: parameterized query functions mirroring the
   * reference's 11 API routes over the persisted fact cube
   * (api/app/main.py:925-1866). The engine deliverable is these functions,
   * not an HTTP server (SURVEY §3 EP3).
   *
-  * All functions take the fact cube (`mv_focos_day_dim` shape: day, uf,
-  * cd_uf, cd_mun, mun_nm_mun, bioma, cd_bioma, uc_nome, cd_cnuc, ti_nome,
-  * terrai_cod, n_focos) and return DataFrames; the driver-side scalars
-  * (legend breaks) collect only the ≤ thousands of aggregated values, never
-  * facts.
+  * Spark aggregates the cube; routes shape bounded rows on the driver. The
+  * cube (`mv_focos_day_dim` shape: day, uf, cd_uf, cd_mun, mun_nm_mun,
+  * bioma, cd_bioma, uc_nome, cd_cnuc, ti_nome, terrai_cod, n_focos) is read
+  * by ONE Spark aggregate per request — `cube.filter(where).groupBy(≤ 1
+  * key).agg(...)`, built by `aggregate` — whose result is bounded by its
+  * key (≤ 365 days, ≤ 27 UFs, ≤ 5 570 municipalities), as the reference
+  * answers with one SQL statement over the materialized view and shapes
+  * legend, GeoJSON and labels in Python (SURVEY EP3). Everything after the
+  * aggregate — ordering, limits, zero-fill, the merge with one UF's or one
+  * key's collected geometry rows, simplification, bboxes — runs on those
+  * rows. Routes return local DataFrames with the same schema a lazy
+  * formulation would have, so a later `collect`, `head` or [[legendFor]]
+  * runs no Spark job. The cube itself is never collected.
   */
 object Serve {
 
@@ -73,25 +85,74 @@ object Serve {
     else if (days > TsWeekThresholdDays) "week"
     else "day"
 
-  /** /api/timeseries/total (main.py:1448-1506). */
-  def timeseries(cube: DataFrame, from: LocalDate, to: LocalDate, f: Filters): DataFrame = {
-    validateRange(from, to)
-    val days = java.time.temporal.ChronoUnit.DAYS.between(from, to)
-    val bucket = granularity(days) match {
+  // ------------------------------------------------ the one Spark step
+
+  /** The one Spark step of a cube route: filter, group by at most one key,
+    * aggregate, collect. Returns the aggregate's schema with its rows. */
+  private def aggregate(cube: DataFrame, where: Column, key: Seq[Column],
+                        aggs: Column*): (StructType, Array[Row]) = {
+    val df = cube.filter(where).groupBy(key: _*).agg(aggs.head, aggs.tail: _*)
+    (df.schema, df.collect())
+  }
+
+  /** A route's response: driver-side rows as a local frame. */
+  private def local(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  // The aggregate shapes the routes share; validateConsistency reuses them.
+  private def totalAgg(cube: DataFrame, from: LocalDate, to: LocalDate, f: Filters) =
+    aggregate(cube, factWhere(from, to, f), Nil, coalesce(sum("n_focos"), lit(0)).as("n_focos"))
+
+  private def bucketAgg(cube: DataFrame, from: LocalDate, to: LocalDate, f: Filters,
+                        bucket: Column) =
+    aggregate(cube, factWhere(from, to, f), Seq(bucket.as("bucket")), sum("n_focos").as("n_focos"))
+
+  private def ufAgg(cube: DataFrame, from: LocalDate, to: LocalDate, f: Filters) =
+    aggregate(cube, factWhere(from, to, f), Seq(col("uf")), sum("n_focos").as("n_focos"))
+
+  /** The timeseries bucket for a range: the day itself, or its week/month. */
+  private def bucketOf(from: LocalDate, to: LocalDate): Column =
+    granularity(java.time.temporal.ChronoUnit.DAYS.between(from, to)) match {
       case "day" => col("day")
       case g => date_trunc(g, col("day")).cast("date")
     }
-    cube.filter(factWhere(from, to, f))
-      .groupBy(bucket.as("bucket"))
-      .agg(sum("n_focos").as("n_focos"))
-      .orderBy("bucket")
+
+  /** Σ of a collected long column, nulls skipped (SQL `sum`). */
+  private def sumOf(rows: Seq[Row], i: Int): Long =
+    rows.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).sum
+
+  /** Spark's ascending order over collected values: nulls first, strings
+    * in UTF-8 byte order (as `UTF8String` compares them), the rest by their
+    * natural order. */
+  private val sparkAsc: Ordering[Any] = new Ordering[Any] {
+    def compare(a: Any, b: Any): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+      case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    }
+  }
+
+  /** `ORDER BY n_focos DESC, key ASC` over collected rows (Spark's DESC
+    * puts nulls last, as the reversed [[sparkAsc]] does). */
+  private def countDescKeyAsc(n: Int, key: Int): Ordering[Row] =
+    Ordering.by[Row, Any](_.get(n))(sparkAsc.reverse).orElseBy(_.get(key))(sparkAsc)
+
+  // ------------------------------------------------------------ routes
+
+  /** /api/timeseries/total (main.py:1448-1506). */
+  def timeseries(cube: DataFrame, from: LocalDate, to: LocalDate, f: Filters): DataFrame = {
+    validateRange(from, to)
+    val (schema, rows) = bucketAgg(cube, from, to, f, bucketOf(from, to))
+    local(cube.sparkSession, schema, rows.sortBy(_.get(0))(sparkAsc).toSeq)
   }
 
   /** /api/totals (main.py:1597-1635). */
   def totals(cube: DataFrame, from: LocalDate, to: LocalDate, f: Filters): DataFrame = {
     validateRange(from, to)
-    cube.filter(factWhere(from, to, f))
-      .agg(coalesce(sum("n_focos"), lit(0)).as("n_focos"))
+    val (schema, rows) = totalAgg(cube, from, to, f)
+    local(cube.sparkSession, schema, rows.toSeq)
   }
 
   /** /api/top — T1 with the municipality guardrail (main.py:1509-1594):
@@ -113,26 +174,35 @@ object Serve {
     val effLimit =
       if (by == "mun" && normalizeFilters(f).uf.isEmpty) math.min(limit, MunGuardrailLimit)
       else limit
-    cube.filter(factWhere(from, to, f) && keyCol.isNotNull)
-      .groupBy(keyCol.as("key"))
-      .agg(max(nameCol).as("name"), sum("n_focos").as("n_focos"))
-      .orderBy(col("n_focos").desc, col("key").asc)
-      .limit(effLimit)
+    val (schema, rows) = aggregate(cube, factWhere(from, to, f) && keyCol.isNotNull,
+      Seq(keyCol.as("key")), max(nameCol).as("name"), sum("n_focos").as("n_focos"))
+    local(cube.sparkSession, schema, rows.sorted(countDescKeyAsc(2, 0)).take(effLimit).toSeq)
   }
 
+  private val SummarySchema = StructType(Seq(
+    StructField("total_focos", LongType, nullable = false),
+    StructField("mean_daily", DoubleType),
+    StructField("peak_day", DateType),
+    StructField("peak_n", LongType)))
+
   /** /api/summary — totals + mean + peak day (T2 tiebreak: n_focos desc,
-    * day asc; main.py:1638-1710). Single-pass: max_by with struct ordering.
+    * day asc; main.py:1638-1710), from the day-keyed aggregate rows: the
+    * total, the mean of the daily counts rounded HALF_UP to 2 places, and
+    * the day with the highest count, the earliest on ties.
     */
   def summary(cube: DataFrame, from: LocalDate, to: LocalDate, f: Filters): DataFrame = {
     validateRange(from, to)
-    val daily = cube.filter(factWhere(from, to, f))
-      .groupBy("day").agg(sum("n_focos").as("n"))
-    daily.agg(
-      coalesce(sum("n"), lit(0)).as("total_focos"),
-      round(avg("n"), 2).as("mean_daily"),
-      max_by(col("day"), struct(col("n"), to_timestamp(col("day")).cast("long") * -1))
-        .as("peak_day"),
-      max("n").as("peak_n"))
+    val days = bucketAgg(cube, from, to, f, col("day"))._2.toSeq
+    val counted = days.filterNot(_.isNullAt(1))
+    val mean = if (counted.isEmpty) None else Some(BigDecimal(
+      counted.map(_.getLong(1).toDouble).sum / counted.length)
+      .setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    // a null count ranks below every count, as in max_by over struct(n, -day)
+    val peak = days.maxByOption(r =>
+      (if (r.isNullAt(1)) None else Some(r.getLong(1)), -r.getDate(0).toLocalDate.toEpochDay))
+    local(cube.sparkSession, SummarySchema, Seq(Row(sumOf(days, 1),
+      mean.map(Double.box).orNull, peak.map(_.getDate(0)).orNull,
+      counted.map(_.getLong(1)).maxOption.map(Long.box).orNull)))
   }
 
   /** /api/points — T3 limit+1 truncation probe (main.py:496-526):
@@ -157,20 +227,30 @@ object Serve {
   }
 
   /** /api/choropleth/uf — J9: latest geometry per UF left-joined with the
-    * period aggregate, zero-filled (main.py:950-975). `geoms` carries
-    * (uf, day, geom…); latest = row_number by day desc.
+    * period aggregate, zero-filled, ordered by uf (main.py:950-975).
+    * `geoms` carries (uf, day, geom…) and is collected whole (≤ 27 UFs ×
+    * their versions). Latest = the newest day; versions of one UF on the
+    * same day are ranked by canonical GeoJSON ([[geometryGeoJson]]), then
+    * by the row's rendered values, smallest first — so the choice never
+    * depends on the order the rows arrive in.
     */
   def choroplethUf(cube: DataFrame, geoms: DataFrame,
                    from: LocalDate, to: LocalDate, f: Filters): DataFrame = {
     validateRange(from, to)
-    val agg = cube.filter(factWhere(from, to, f))
-      .groupBy("uf").agg(sum("n_focos").as("n_focos"))
-    val latest = geoms.withColumn("rn", row_number().over(
-        Window.partitionBy("uf").orderBy(col("day").desc)))
-      .filter(col("rn") === 1).drop("rn", "day")
-    latest.join(agg, Seq("uf"), "left")
-      .withColumn("n_focos", coalesce(col("n_focos"), lit(0)))
-      .orderBy("uf")
+    // a null uf matches nothing, as in the SQL join
+    val n = ufAgg(cube, from, to, f)._2.filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      .map(r => r.get(0) -> r.getLong(1)).toMap
+    val s = geoms.schema
+    val (uf, day, geom) = (s.fieldIndex("uf"), s.fieldIndex("day"), s.fieldIndex("geom"))
+    val kept = s.indices.filter(i => i != uf && i != day)
+    val latestFirst = Ordering.by[Row, Any](_.get(day))(sparkAsc.reverse)
+      .orElseBy(r => if (r.isNullAt(geom)) "" else geometryGeoJson(geomAt(r, geom)))
+      .orElseBy(_.mkString("\u0000"))
+    val rows = geoms.collect().groupBy(_.get(uf)).values.map(_.min(latestFirst)).toSeq
+      .sortBy(_.get(uf))(sparkAsc)
+      .map(r => Row.fromSeq(r.get(uf) +: kept.map(r.get) :+ n.getOrElse(r.get(uf), 0L)))
+    local(cube.sparkSession, StructType(s(uf) +: kept.map(s(_)) :+
+      StructField("n_focos", LongType, nullable = false)), rows)
   }
 
   // ------------------------------------------------------- legend breaks
@@ -234,11 +314,26 @@ object Serve {
 
   // -------------------------------------------- geometry-serving routes
 
+  /** The multipolygon in column `i` of a collected geometry row. Row.getSeq
+    * yields mutable ArraySeq at every nesting level — declare collection.Seq
+    * or the immutable-Seq cast blows up at iteration time. */
+  private def geomAt(r: Row, i: Int): Geo.MultiPolygon = {
+    type CSeq[A] = scala.collection.Seq[A]
+    r.getSeq[CSeq[CSeq[CSeq[Double]]]](i).iterator.map(_.iterator.map(
+      _.iterator.map(p => (p(0), p(1))).toIndexedSeq).toIndexedSeq).toIndexedSeq
+  }
+
+  /** The geometry column type a lazy `simplifyDPUdf` call produced. */
+  private val GeomType = ArrayType(ArrayType(ArrayType(ArrayType(DoubleType, containsNull = false))))
+
   /** /api/choropleth/mun — J10 (api/app/main.py:1020-1130): per-UF
     * municipality geometries simplified at `tol` degrees, LEFT JOIN the
     * period aggregate USING (key), zero-filled, ordered n_focos desc / key.
-    * `munGeoms` carries (key, uf, geom). The uf filter is mandatory and the
-    * range capped at [[ChoroMaxDaysMun]], as in the reference.
+    * `munGeoms` carries (key, uf, geom); only the requested UF's rows are
+    * collected, then simplified (ring by ring, as `simplifyDPUdf` does) and
+    * merged with the municipality aggregate on the driver. The uf filter
+    * is mandatory and the range capped at [[ChoroMaxDaysMun]], as in the
+    * reference.
     */
   def choroplethMun(cube: DataFrame, munGeoms: DataFrame,
                     from: LocalDate, to: LocalDate, f: Filters,
@@ -249,49 +344,66 @@ object Serve {
     val days = java.time.temporal.ChronoUnit.DAYS.between(from, to)
     require(days <= ChoroMaxDaysMun,
       s"range too large for municipal choropleth; reduce to <= $ChoroMaxDaysMun days")
-    val agg = cube.filter(factWhere(from, to, f))
-      .groupBy(col("cd_mun").cast("string").as("key"))
-      .agg(max("mun_nm_mun").cast("string").as("label"), sum("n_focos").as("n_focos"))
+    val agg = aggregate(cube, factWhere(from, to, f), Seq(col("cd_mun").cast("string").as("key")),
+      max("mun_nm_mun").cast("string").as("label"), sum("n_focos").as("n_focos"))._2
+      .filterNot(_.isNullAt(0)).map(r => r.getString(0) -> r).toMap
     val g = munGeoms.filter(upper(col("uf").cast("string")) === fn.uf.get)
-      .select(col("key").cast("string").as("key"), col("uf"),
-        GeoFunctions.simplifyDPUdf(col("geom"), lit(tol)).as("geom"))
-    g.join(agg, Seq("key"), "left")
-      .select(col("key"), col("uf"),
-        coalesce(col("label"), col("key")).as("label"),
-        coalesce(col("n_focos"), lit(0L)).as("n_focos"), col("geom"))
-      .withColumn("mean_per_day",
-        col("n_focos").cast("double") / math.max(1L, days).toDouble)
-      .orderBy(col("n_focos").desc, col("key").asc)
+      .select(col("key").cast("string").as("key"), col("uf"), col("geom"))
+    val rows = g.collect().toSeq.map { r =>
+      val key = r.getString(0)
+      val a = agg.get(key)
+      val n = a.filterNot(_.isNullAt(2)).fold(0L)(_.getLong(2))
+      Row(key, r.get(1), a.flatMap(x => Option(x.getString(1))).getOrElse(key), n,
+        if (r.isNullAt(2)) null
+        else geomAt(r, 2).map(_.map(ring =>
+          Geo.simplifyDPChecked(ring, tol).map(p => Seq(p._1, p._2)))),
+        n.toDouble / math.max(1L, days).toDouble)
+    }.sorted(countDescKeyAsc(3, 0))
+    val (key, uf) = (g.schema("key"), g.schema("uf"))
+    local(cube.sparkSession, StructType(Seq(key, uf,
+      StructField("label", StringType, key.nullable),
+      StructField("n_focos", LongType, nullable = false),
+      StructField("geom", GeomType),
+      StructField("mean_per_day", DoubleType))), rows)
   }
 
   /** Legend for a choropleth result: collect the (≤5 570) aggregated values
     * driver-side and run the exact break algorithm, as the reference does
-    * in Python (main.py:1096-1113). */
+    * in Python (main.py:1096-1113). On a frame this layer returned the
+    * collect reads local rows and runs no Spark job. */
   def legendFor(choropleth: DataFrame, valueCol: String = "n_focos"): Legend =
     computeBreaks(choropleth.select(col(valueCol).cast("long")).collect()
       .map(r => if (r.isNullAt(0)) 0L else r.getLong(0)).toSeq)
 
   /** /api/lookup/mun (main.py:1133-1208): geometry row for the key LEFT
     * JOIN the fact-derived display name; uf upper-cased for both uf fields.
-    * Empty result ⇔ the reference's 404.
+    * Empty result ⇔ the reference's 404 — then the cube is not read.
     */
   def lookupMun(cube: DataFrame, munGeoms: DataFrame, key: String): DataFrame = {
     val k = normText(Some(key)).getOrElse(
       throw new IllegalArgumentException("key is required"))
     val gm = munGeoms.filter(col("key").cast("string") === k)
-      .select(col("key").cast("string").as("mun"), col("uf")).limit(1)
-    val d = cube.filter(col("cd_mun").cast("string") === k)
-      .groupBy(col("cd_mun").cast("string").as("mun"))
-      .agg(max("mun_nm_mun").cast("string").as("mun_nome"))
-    gm.join(d, Seq("mun"), "left")
-      .select(col("mun"), coalesce(col("mun_nome"), col("mun")).as("mun_nome"),
-        upper(col("uf").cast("string")).as("uf"),
-        upper(col("uf").cast("string")).as("uf_nome"))
+      .select(col("key").cast("string").as("mun"), upper(col("uf").cast("string")).as("uf"))
+    val (mun, uf) = (gm.schema("mun"), gm.schema("uf"))
+    val schema = StructType(Seq(mun, StructField("mun_nome", StringType, mun.nullable),
+      uf, uf.copy(name = "uf_nome")))
+    val rows = gm.head(1).toSeq.map { g =>
+      val name = aggregate(cube, col("cd_mun").cast("string") === k, Nil,
+        max("mun_nm_mun").cast("string").as("mun_nome"))._2.head
+      Row(g.get(0), if (name.isNullAt(0)) g.get(0) else name.get(0), g.get(1), g.get(1))
+    }
+    local(cube.sparkSession, schema, rows)
   }
+
+  private val BoundsSchema = StructType(
+    Seq("minx", "miny", "maxx", "maxy", "center_lat", "center_lon").map(StructField(_, DoubleType)))
 
   /** /api/bounds (main.py:1211-1245, _load_bounds_bbox at 852-922): bbox of
     * the keyed geometry (ST_Extent over all of the key's rows/parts) plus
-    * the center [lat, lon] (_bbox_center, main.py:849).
+    * the center [lat, lon] (_bbox_center, main.py:849), computed on the
+    * key's collected geometry rows. A missing key yields an EMPTY frame —
+    * the engine's empty⇔404 contract (the reference 404s "geometry not
+    * found for key", main.py:919-920).
     */
   def bounds(geoms: DataFrame, key: String, uf: Option[String] = None): DataFrame = {
     val k = normText(Some(key)).getOrElse(
@@ -299,15 +411,16 @@ object Serve {
     var g = geoms.filter(col("key").cast("string") === k)
     uf.flatMap(u => normText(Some(u))).foreach(u =>
       g = g.filter(upper(col("uf").cast("string")) === u))
-    g.withColumn("bb", GeoFunctions.bboxUdf(col("geom")))
-      .agg(min("bb._1").as("minx"), min("bb._2").as("miny"),
-        max("bb._3").as("maxx"), max("bb._4").as("maxy"))
-      // a global agg over an empty set yields one all-null row; drop it so a
-      // missing key yields an EMPTY frame — the engine's empty⇔404 contract
-      // (the reference 404s "geometry not found for key", main.py:919-920)
-      .filter(col("minx").isNotNull)
-      .withColumn("center_lat", (col("miny") + col("maxy")) / 2.0)
-      .withColumn("center_lon", (col("minx") + col("maxx")) / 2.0)
+    val boxes = g.select("geom").collect().toSeq.filterNot(_.isNullAt(0))
+      .map(r => Geo.bboxOfMultiPolygon(geomAt(r, 0)))
+    // SQL min/max order: NaN above every number
+    val ord = Ordering.Double.TotalOrdering
+    val rows = if (boxes.isEmpty) Nil else {
+      val (minx, miny) = (boxes.map(_.minLon).min(ord), boxes.map(_.minLat).min(ord))
+      val (maxx, maxy) = (boxes.map(_.maxLon).max(ord), boxes.map(_.maxLat).max(ord))
+      Seq(Row(minx, miny, maxx, maxy, (miny + maxy) / 2.0, (minx + maxx) / 2.0))
+    }
+    local(geoms.sparkSession, BoundsSchema, rows)
   }
 
   /** Shape metrics for /api/geo + /api/geo/qa
@@ -343,15 +456,8 @@ object Serve {
     val rows = geoms.filter(col("key").cast("string") === k).select("geom").collect()
     if (rows.isEmpty) return None
 
-    // Row.getSeq yields mutable ArraySeq at every nesting level — declare
-    // collection.Seq or the immutable-Seq cast blows up at iteration time
-    type CSeq[A] = scala.collection.Seq[A]
-    def toMP(raw: CSeq[CSeq[CSeq[CSeq[Double]]]]): Geo.MultiPolygon =
-      raw.iterator.map(_.iterator.map(
-        _.iterator.map(p => (p(0), p(1))).toIndexedSeq).toIndexedSeq).toIndexedSeq
     val rawParts: Geo.MultiPolygon = rows.toIndexedSeq.flatMap { r =>
-      if (r.isNullAt(0)) IndexedSeq.empty[Geo.Polygon]
-      else toMP(r.getSeq[CSeq[CSeq[CSeq[Double]]]](0))
+      if (r.isNullAt(0)) IndexedSeq.empty[Geo.Polygon] else geomAt(r, 0)
     }
     if (rawParts.isEmpty) return None
 
@@ -440,13 +546,17 @@ object Serve {
       case "uc" => f.copy(uc = Some(k))
       case _ => f.copy(ti = Some(k))
     }
-    cube.filter(factWhere(from, to, withKeyFilter) && keyCol.cast("string") === k)
-      .agg(TextFunctions.cleanDisplayLabelUdf(
-        coalesce(max(labelCol).cast("string"), lit(k))).as("label"),
-        coalesce(sum("n_focos"), lit(0L)).as("n_focos"))
-      .withColumn("entity", lit(entity)).withColumn("key", lit(k))
-      .select("entity", "key", "label", "n_focos")
+    val r = aggregate(cube, factWhere(from, to, withKeyFilter) && keyCol.cast("string") === k, Nil,
+      max(labelCol).cast("string").as("label"), coalesce(sum("n_focos"), lit(0L)).as("n_focos"))._2.head
+    local(cube.sparkSession, OverlaySchema, Seq(Row(entity, k,
+      TextFunctions.cleanDisplayLabel(if (r.isNullAt(0)) k else r.getString(0)), r.getLong(1))))
   }
+
+  private val OverlaySchema = StructType(Seq(
+    StructField("entity", StringType, nullable = false),
+    StructField("key", StringType, nullable = false),
+    StructField("label", StringType),
+    StructField("n_focos", LongType, nullable = false)))
 
   /** /api/validate legend-monotonicity check (main.py:1792-1820). */
   def legendMonotonic(l: Legend): Boolean =
@@ -454,15 +564,16 @@ object Serve {
 
   /** /api/validate consistency triple (main.py:1733-1790): totals ==
     * timeseries sum == per-entity (choropleth) sum under any filter combo.
+    * The three sums run the aggregates of [[totals]], [[timeseries]] and
+    * [[choroplethUf]] concurrently.
     */
   def validateConsistency(cube: DataFrame, from: LocalDate, to: LocalDate,
                           f: Filters): (Long, Long, Long) = {
-    val filtered = cube.filter(factWhere(from, to, f))
-    val total = filtered.agg(coalesce(sum("n_focos"), lit(0))).head().getLong(0)
-    val tsSum = timeseries(cube, from, to, f)
-      .agg(coalesce(sum("n_focos"), lit(0))).head().getLong(0)
-    val byUf = filtered.groupBy("uf").agg(sum("n_focos").as("n"))
-      .agg(coalesce(sum("n"), lit(0))).head().getLong(0)
+    validateRange(from, to)
+    val Seq(total, tsSum, byUf) = Pipeline.inParallel(Seq(
+      () => totalAgg(cube, from, to, f)._2.head.getLong(0),
+      () => sumOf(bucketAgg(cube, from, to, f, bucketOf(from, to))._2.toSeq, 1),
+      () => sumOf(ufAgg(cube, from, to, f)._2.toSeq, 1)), threads = 3)
     (total, tsSum, byUf)
   }
 }
