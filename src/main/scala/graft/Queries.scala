@@ -1006,7 +1006,7 @@ object Queries {
         "FROM lineitem GROUP BY 1,2"),
       (s, d) => pricingSummary(s, d)),
 
-    // A1 — the REAL Marts.focosDiarioMunicipio under the gate (round-16:
+    // A1 — the REAL focos_diario_municipio mart-table entry under the gate (round-16:
     // the old row tested an aggregate SHAPE over lineitem; this one runs
     // the actual builder): coalesce(view_ts::date, file_date) day key,
     // null-municipality drop, and the reference's max(area) density
@@ -1021,14 +1021,14 @@ object Queries {
         "CAST(n_focos AS BIGINT) AS n_focos, " +
         "(2000000 * n_focos + mun_area_km2) // (2 * mun_area_km2) AS density_e4 " +
         "FROM m ORDER BY day, mun_cd_mun"),
-      (s, d) => graft.marts.Marts.focosDiarioMunicipio(enrichedProxy(s, d))
+      (s, d) => graft.marts.Marts("focos_diario_municipio")(enrichedProxy(s, d))
         .select(col("day"), col("mun_cd_mun"), col("mun_nm_mun"), col("mun_uf"),
           col("mun_area_km2"), col("n_focos"),
           expr("(2000000 * n_focos + mun_area_km2) div (2 * mun_area_km2)")
             .as("density_e4"))
         .orderBy("day", "mun_cd_mun")),
 
-    // A2 — the REAL Marts.focosMensalMunicipio (11_focos_mensal_municipio
+    // A2 — the REAL focos_mensal_municipio entry (11_focos_mensal_municipio
     // .sql): same semantics with the coalesce day key truncated to month.
     QueryDef("a2_monthly_mart", Some(
       s"WITH e AS ($enrProxySql), " +
@@ -1039,14 +1039,14 @@ object Queries {
         "CAST(n_focos AS BIGINT) AS n_focos, " +
         "(2000000 * n_focos + mun_area_km2) // (2 * mun_area_km2) AS density_e4 " +
         "FROM m ORDER BY month, mun_cd_mun"),
-      (s, d) => graft.marts.Marts.focosMensalMunicipio(enrichedProxy(s, d))
+      (s, d) => graft.marts.Marts("focos_mensal_municipio")(enrichedProxy(s, d))
         .select(col("month"), col("mun_cd_mun"), col("mun_nm_mun"), col("mun_uf"),
           col("mun_area_km2"), col("n_focos"),
           expr("(2000000 * n_focos + mun_area_km2) div (2 * mun_area_km2)")
             .as("density_e4"))
         .orderBy("month", "mun_cd_mun")),
 
-    // A3 — daily UF mart over the REAL Marts.focosDiarioUf: day key is
+    // A3 — the REAL focos_diario_uf mart-table entry: day key is
     // coalesce(view_ts::date, file_date) (20_focos_diario_uf.sql:30-43),
     // area joined INNER (UFs without area drop — 'BUILDING' is excluded
     // from the dim to make that drop observable). Density emitted as an
@@ -1057,7 +1057,7 @@ object Queries {
         "mun_uf AS uf, count(*) AS n_focos FROM e WHERE mun_uf IS NOT NULL GROUP BY 1,2) " +
         s"SELECT m.day, m.uf, CAST(m.n_focos AS BIGINT) AS n_focos, ua.uf_area_km2, " +
         s"$densityE4Sql AS density_e4 FROM m JOIN ua USING (uf) ORDER BY m.day, m.uf"),
-      (s, d) => graft.marts.Marts.focosDiarioUf(enrichedProxy(s, d),
+      (s, d) => graft.marts.Marts("focos_diario_uf")(enrichedProxy(s, d),
           graft.marts.Marts.ufAreaRollup(municipiosProxy(s, d))
             .filter(col("uf") =!= "BUILDING"))
         .select(col("day"), col("uf"), col("n_focos"), col("uf_area_km2"),
@@ -1072,7 +1072,7 @@ object Queries {
         "mun_uf AS uf, count(*) AS n_focos FROM e WHERE mun_uf IS NOT NULL GROUP BY 1,2) " +
         s"SELECT m.month, m.uf, CAST(m.n_focos AS BIGINT) AS n_focos, ua.uf_area_km2, " +
         s"$densityE4Sql AS density_e4 FROM m JOIN ua USING (uf) ORDER BY m.month, m.uf"),
-      (s, d) => graft.marts.Marts.focosMensalUf(enrichedProxy(s, d),
+      (s, d) => graft.marts.Marts("focos_mensal_uf")(enrichedProxy(s, d),
           graft.marts.Marts.ufAreaRollup(municipiosProxy(s, d))
             .filter(col("uf") =!= "BUILDING"))
         .select(col("month"), col("uf"), col("n_focos"), col("uf_area_km2"),
@@ -1087,7 +1087,7 @@ object Queries {
         "SELECT file_date AS day, cd_bioma, max(bioma) AS bioma, " +
         "CAST(count(*) AS INT) AS focos FROM e WHERE cd_bioma IS NOT NULL " +
         "GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosDiarioBioma(enrichedProxy(s, d))
+      (s, d) => graft.marts.Marts("focos_diario_bioma")(enrichedProxy(s, d))
         .orderBy("day", "cd_bioma")),
 
     // A4 monthly (41_*.sql — still file_date-keyed).
@@ -1096,7 +1096,7 @@ object Queries {
         "SELECT CAST(date_trunc('month', file_date) AS DATE) AS month, cd_bioma, " +
         "max(bioma) AS bioma, CAST(count(*) AS INT) AS focos FROM e " +
         "WHERE cd_bioma IS NOT NULL GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosMensalBioma(enrichedProxy(s, d))
+      (s, d) => graft.marts.Marts("focos_mensal_bioma")(enrichedProxy(s, d))
         .orderBy("month", "cd_bioma")),
 
     // A5 — UC daily mart (50_focos_diario_uc.sql): biome shape, file_date
@@ -1106,19 +1106,17 @@ object Queries {
         "SELECT file_date AS day, cd_cnuc, max(uc_nome) AS uc_nome, " +
         "CAST(count(*) AS INT) AS focos FROM e WHERE cd_cnuc IS NOT NULL " +
         "GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosDiarioKeyed(enrichedProxy(s, d),
-          "cd_cnuc", Seq("uc_nome"))
+      (s, d) => graft.marts.Marts("focos_diario_uc")(enrichedProxy(s, d))
         .orderBy("day", "cd_cnuc")),
 
-    // A5 monthly (51_focos_mensal_uc.sql:24-35): same shared keyed-mart
-    // path, file_date month key — oracle row closes the UC family 2/2.
+    // A5 monthly (51_focos_mensal_uc.sql:24-35): same shared keyed-count
+    // builder, file_date month key — oracle row closes the UC family 2/2.
     QueryDef("a5_monthly_uc", Some(
       s"WITH e AS ($enrProxySql) " +
         "SELECT CAST(date_trunc('month', file_date) AS DATE) AS month, cd_cnuc, " +
         "max(uc_nome) AS uc_nome, CAST(count(*) AS INT) AS focos FROM e " +
         "WHERE cd_cnuc IS NOT NULL GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosMensalKeyed(enrichedProxy(s, d),
-          "cd_cnuc", Seq("uc_nome"))
+      (s, d) => graft.marts.Marts("focos_mensal_uc")(enrichedProxy(s, d))
         .orderBy("month", "cd_cnuc")),
 
     // A6 — TI monthly mart (61_focos_mensal_ti.sql): file_date month key.
@@ -1127,8 +1125,7 @@ object Queries {
         "SELECT CAST(date_trunc('month', file_date) AS DATE) AS month, terrai_cod, " +
         "max(ti_nome) AS ti_nome, CAST(count(*) AS INT) AS focos FROM e " +
         "WHERE terrai_cod IS NOT NULL GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosMensalKeyed(enrichedProxy(s, d),
-          "terrai_cod", Seq("ti_nome"))
+      (s, d) => graft.marts.Marts("focos_mensal_ti")(enrichedProxy(s, d))
         .orderBy("month", "terrai_cod")),
 
     // A6 daily (60_focos_diario_ti.sql:20-31): raw file_date key — oracle
@@ -1140,8 +1137,7 @@ object Queries {
         "SELECT file_date AS day, terrai_cod, max(ti_nome) AS ti_nome, " +
         "CAST(count(*) AS INT) AS focos FROM e WHERE terrai_cod IS NOT NULL " +
         "GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosDiarioKeyed(enrichedProxy(s, d),
-          "terrai_cod", Seq("ti_nome"))
+      (s, d) => graft.marts.Marts("focos_diario_ti")(enrichedProxy(s, d))
         .orderBy("day", "terrai_cod")),
 
     // A9 — UF area rollup (sql/ref/05_ref_uf_area.sql:10-18): the dim-side

@@ -7,10 +7,16 @@ import org.apache.spark.sql.types.DecimalType
 
 /** Aggregate marts (SURVEY §2.4) with the reference's exact key semantics.
   *
-  * Two different day keys — deliberately copied, not "fixed" (§7.4 risk 5):
-  *  - municipality/UF marts key on `coalesce(view_ts::date, file_date)`
+  * [[Marts.table]] is the one place to add a mart: one entry per stored
+  * table, in the reference's file order (src/etl/marts_runner.py:16-34).
+  * `Pipeline.writeMarts` builds, slices, caches and schedules from it alone.
+  *
+  * Each family takes its day from one column — two different day keys,
+  * deliberately copied, not "fixed" (§7.4 risk 5):
+  *  - municipality/UF marts, the trend view over them and the fact cube:
+  *    [[dayKey]] = `coalesce(view_ts::date, file_date)`
   *    (sql/marts/10_focos_diario_municipio.sql:38)
-  *  - biome/UC/TI marts key on raw `file_date`
+  *  - biome/UC/TI marts: raw [[fileDate]]
   *    (sql/marts/40_focos_diario_bioma.sql:22)
   *
   * Ratio columns use Decimal arithmetic to match Postgres `numeric`
@@ -28,67 +34,104 @@ object Marts {
     * matching Postgres `::date` + coalesce. */
   val dayKey: Column = coalesce(to_date(col("view_ts")), col("file_date"))
 
+  /** Raw `file_date`: the biome/UC/TI marts' day. */
+  val fileDate: Column = col("file_date")
+
+  /** The period a fact falls in at `grain`: its day, or its month's first day. */
+  def period(dayFrom: Column, grain: String): Column =
+    if (grain == "day") dayFrom else date_trunc("month", dayFrom).cast("date")
+
+  /** A mart's rows from (period column, facts, UF areas). */
+  type Aggregate = (Column, DataFrame, () => DataFrame) => DataFrame
+
+  /** One mart table entry. `grain` (`day` or `month`) is the period it
+    * counts per and its partition column; `dayFrom` the column a fact's day
+    * is taken from. Entries sharing an `aggregate` are one family, written
+    * by one task. With `over`, the entry is a view over that entry's whole
+    * stored table: rebuilt whole, stored unpartitioned, on its task after it.
+    */
+  final case class Mart(name: String, grain: String, dayFrom: Column,
+                        aggregate: Aggregate, over: Option[Mart] = None) {
+    require(grain == "day" || grain == "month", s"$name: grain must be day or month")
+
+    /** The mart's rows from `facts`; only the UF marts read `ufArea`. */
+    def apply(facts: DataFrame,
+              ufArea: => DataFrame = throw new IllegalArgumentException(
+                s"$name needs the UF area rollup")): DataFrame =
+      aggregate(period(dayFrom, grain).as(grain), facts, () => ufArea)
+  }
+
   private def per100km2(n: Column, area: Column): Column =
     round((lit(100) * n.cast(DecimalType(38, 10))) /
       when(area === 0, null).otherwise(area).cast(DecimalType(38, 10)), 4)
 
-  /** A1 — daily municipality mart (10_focos_diario_municipio.sql:28-51). */
-  def focosDiarioMunicipio(enriched: DataFrame): DataFrame =
-    enriched.filter(col("mun_cd_mun").isNotNull)
-      .groupBy(dayKey.as("day"), col("mun_cd_mun"), col("mun_nm_mun"), col("mun_uf"))
-      .agg(max("mun_area_km2").as("mun_area_km2"), count(lit(1)).as("n_focos"))
+  /** The keyed-count builder: facts whose first key is non-null, grouped by
+    * (period, keys), the `max` of each `maxOf` label or area column, and the
+    * row count as `n`. */
+  private def keyedCount(period: Column, facts: DataFrame, keys: Seq[String],
+                         maxOf: Seq[String], n: String): DataFrame = {
+    val aggs = maxOf.map(c => max(c).as(c)) :+ count(lit(1)).as(n)
+    facts.filter(col(keys.head).isNotNull)
+      .groupBy(period +: keys.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** A1/A2 — municipality marts (10/11_focos_*_municipio.sql:28-51), with
+    * the reference's max(area) density denominator. */
+  private val municipio: Aggregate = (period, facts, _) =>
+    keyedCount(period, facts, Seq("mun_cd_mun", "mun_nm_mun", "mun_uf"),
+      Seq("mun_area_km2"), "n_focos")
       .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("mun_area_km2")))
 
-  /** A2 — monthly municipality mart (11_focos_mensal_municipio.sql). */
-  def focosMensalMunicipio(enriched: DataFrame): DataFrame =
-    enriched.filter(col("mun_cd_mun").isNotNull)
-      .groupBy(date_trunc("month", dayKey).cast("date").as("month"),
-        col("mun_cd_mun"), col("mun_nm_mun"), col("mun_uf"))
-      .agg(max("mun_area_km2").as("mun_area_km2"), count(lit(1)).as("n_focos"))
-      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("mun_area_km2")))
+  /** A3/J6 — UF marts with the area join (20/21_focos_*_uf.sql:30-43):
+    * inner, so UFs without an area drop, as in J6. */
+  private val uf: Aggregate = (period, facts, ufArea) =>
+    keyedCount(period, facts, Seq("mun_uf"), Nil, "n_focos")
+      .withColumnRenamed("mun_uf", "uf")
+      .join(broadcast(ufArea()), "uf")
+      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("uf_area_km2")))
 
-  /** A3/J6 — daily UF mart with area join (20_focos_diario_uf.sql:30-43). */
+  /** A4/A5/A6 — biome, UC and TI marts (40..61_*.sql): label = max(),
+    * count as `int`. */
+  private def labelled(key: String, label: String): Aggregate = (period, facts, _) =>
+    keyedCount(period, facts, Seq(key), Seq(label), "focos")
+      .withColumn("focos", col("focos").cast("int"))
+  private val bioma = labelled("cd_bioma", "bioma")
+  private val uc = labelled("cd_cnuc", "uc_nome")
+  private val ti = labelled("terrai_cod", "ti_nome")
+
+  /** Read by `Pipeline.checkDay` and the trend view. */
+  val diarioMunicipio: Mart = Mart("focos_diario_municipio", "day", dayKey, municipio)
+  val diarioUf: Mart = Mart("focos_diario_uf", "day", dayKey, uf)
+
+  /** Every stored mart, in the reference's file order. */
+  val table: Seq[Mart] = Seq(
+    diarioMunicipio,
+    Mart("focos_mensal_municipio", "month", dayKey, municipio),
+    diarioUf,
+    Mart("focos_mensal_uf", "month", dayKey, uf),
+    Mart("focos_diario_bioma", "day", fileDate, bioma),
+    Mart("focos_mensal_bioma", "month", fileDate, bioma),
+    Mart("focos_diario_uc", "day", fileDate, uc),
+    Mart("focos_mensal_uc", "month", fileDate, uc),
+    Mart("focos_diario_ti", "day", fileDate, ti),
+    Mart("focos_mensal_ti", "month", fileDate, ti),
+    Mart("focos_diario_uf_trend", "day", dayKey,
+      (_, dailyUf, _) => focosDiarioUfTrend(dailyUf), over = Some(diarioUf)),
+    // the fact cube for the serving layer (065_mv_focos_day_dim.sql) —
+    // cd_uf is the UF code column the reference denormalizes; our dims
+    // carry uf text
+    Mart("mv_focos_day_dim", "day", dayKey,
+      (period, facts, _) => cube(period, facts.withColumn("cd_uf", col("mun_uf")))))
+
+  /** The table entry named `name`. */
+  def apply(name: String): Mart =
+    table.find(_.name == name).getOrElse(
+      throw new IllegalArgumentException(s"no mart named $name"))
+
+  /** A3/J6 — the daily UF mart over `enriched`. */
   def focosDiarioUf(enriched: DataFrame, ufArea: DataFrame): DataFrame =
-    enriched.filter(col("mun_uf").isNotNull)
-      .groupBy(dayKey.as("day"), col("mun_uf").as("uf"))
-      .agg(count(lit(1)).as("n_focos"))
-      .join(broadcast(ufArea), "uf") // inner: UFs without area drop, as in J6
-      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("uf_area_km2")))
-
-  /** A3 monthly — UF mart keyed by month (21_focos_mensal_uf.sql:30-43). */
-  def focosMensalUf(enriched: DataFrame, ufArea: DataFrame): DataFrame =
-    enriched.filter(col("mun_uf").isNotNull)
-      .groupBy(date_trunc("month", dayKey).cast("date").as("month"),
-        col("mun_uf").as("uf"))
-      .agg(count(lit(1)).as("n_focos"))
-      .join(broadcast(ufArea), "uf")
-      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("uf_area_km2")))
-
-  /** A4 — biome daily/monthly marts: keyed on FILE_DATE, label = max()
-    * (40_focos_diario_bioma.sql:20-30). */
-  def focosDiarioBioma(enriched: DataFrame): DataFrame =
-    enriched.filter(col("cd_bioma").isNotNull)
-      .groupBy(col("file_date").as("day"), col("cd_bioma"))
-      .agg(max("bioma").as("bioma"), count(lit(1)).cast("int").as("focos"))
-
-  def focosMensalBioma(enriched: DataFrame): DataFrame =
-    enriched.filter(col("cd_bioma").isNotNull)
-      .groupBy(date_trunc("month", col("file_date")).cast("date").as("month"), col("cd_bioma"))
-      .agg(max("bioma").as("bioma"), count(lit(1)).cast("int").as("focos"))
-
-  /** A5/A6 — UC and TI marts share the biome shape (50/60_*.sql). */
-  def focosDiarioKeyed(enriched: DataFrame, keyCol: String, labelCols: Seq[String]): DataFrame =
-    enriched.filter(col(keyCol).isNotNull)
-      .groupBy(col("file_date").as("day"), col(keyCol))
-      .agg(labelCols.map(c => max(c).as(c)).head,
-        (labelCols.map(c => max(c).as(c)).tail :+ count(lit(1)).cast("int").as("focos")): _*)
-
-  /** A5/A6 monthly flavor (51/61_*.sql — still file_date-keyed). */
-  def focosMensalKeyed(enriched: DataFrame, keyCol: String, labelCols: Seq[String]): DataFrame =
-    enriched.filter(col(keyCol).isNotNull)
-      .groupBy(date_trunc("month", col("file_date")).cast("date").as("month"), col(keyCol))
-      .agg(labelCols.map(c => max(c).as(c)).head,
-        (labelCols.map(c => max(c).as(c)).tail :+ count(lit(1)).cast("int").as("focos")): _*)
+    diarioUf(enriched, ufArea)
 
   /** A7/W3 — period stats + argmax peak day with the DISTINCT ON tiebreak
     * `order by uf, n_focos desc, day` (40_focos_periodo_uf.sql:22-73).
@@ -137,9 +180,10 @@ object Marts {
     * (sqlm/marts/canonical/065_mv_focos_day_dim.sql:5-20): group by the 11
     * dimension columns, count. Every API aggregate reads this table.
     */
-  def factCube(enrichedFull: DataFrame): DataFrame =
-    enrichedFull.groupBy(
-        dayKey.as("day"),
+  def factCube(enrichedFull: DataFrame): DataFrame = cube(dayKey.as("day"), enrichedFull)
+
+  private def cube(period: Column, facts: DataFrame): DataFrame =
+    facts.groupBy(period,
         col("mun_uf").as("uf"), col("cd_uf"), col("mun_cd_mun").as("cd_mun"),
         col("mun_nm_mun"), col("bioma"), col("cd_bioma"),
         col("uc_nome"), col("cd_cnuc"), col("ti_nome"), col("terrai_cod"))
@@ -157,11 +201,11 @@ object Marts {
     municipios.groupBy(col("uf"))
       .agg(sum("area_km2").as("uf_area_km2"))
 
-  /** K2 — partition-overwrite write of a mart keyed by `partCol`. */
-  def writePartitioned(df: DataFrame, path: String, partCol: String): Unit = {
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode("overwrite").partitionBy(partCol).parquet(path)
-  }
+  /** K2 — partition-overwrite write of a mart keyed by `partCol`: replaces
+    * only the partitions `df` holds, whatever the session's overwrite mode. */
+  def writePartitioned(df: DataFrame, path: String, partCol: String): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(path)
 
   /** Range-sorted write: repartitionByRange + sortWithinPartitions on
     * `sortCols` before writing, so every output file covers a DISJOINT

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Date
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.enrich.Enrich
@@ -200,33 +200,34 @@ final class Pipeline(spark: SparkSession, root: String,
     }
   }
 
-  /** Mart input for day `d`: partition-pruned read of enriched/, then the
-    * derived day-key filter. The `file_date` BETWEEN bound is what makes a
-    * single-day run scan O(retention) partitions instead of full history
-    * (the reference scans the FULL enriched table with only the day-key
-    * predicate, 10_focos_diario_municipio.sql:50 — the window is the
-    * deliberate scale deviation, same as [[monthInput]]'s). Padded BOTH
-    * sides: the day key can lag file_date (GMT view_ts vs local file day)
-    * AND lead it (late files carrying earlier view days — a monthly-
-    * archive backfill), so a one-sided [d-retention, d] window silently
-    * dropped late-arriving rows from every day-d rebuild. */
-  def martInput(enrichedAll: DataFrame, d: Date): DataFrame =
-    enrichedAll
-      .filter(col("file_date").between(
-        date_sub(lit(d), retentionDays), date_add(lit(d), retentionDays)))
-      .filter(Marts.dayKey === lit(d))
-
-  /** Monthly-mart input: the whole month containing `d` (the reference
-    * deletes+rebuilds the month partition, 11_focos_mensal_municipio.sql),
-    * still bounded by a file_date partition window around the month. */
-  def monthInput(enrichedAll: DataFrame, d: Date): DataFrame = {
+  /** The facts of the day or month (`grain`) containing `d`, a fact's day
+    * taken from `dayFrom`: a partition-pruned read of enriched/, then the
+    * derived period filter. The `file_date` BETWEEN bound makes a rebuild
+    * scan O(retention) partitions instead of full history (the reference
+    * scans the FULL table with only the day-key predicate,
+    * 10_focos_diario_municipio.sql:50 — the deliberate scale deviation).
+    * Padded BOTH sides: the view day can lag file_date AND lead it (late
+    * files carrying earlier view days), so a one-sided window silently
+    * dropped late-arriving rows from every rebuild. */
+  private def slice(enrichedAll: DataFrame, dayFrom: Column, grain: String,
+                    d: Date): DataFrame = {
     val ld = d.toLocalDate
-    val mStart = Date.valueOf(ld.withDayOfMonth(1))
-    val mEnd = Date.valueOf(ld.withDayOfMonth(ld.lengthOfMonth))
+    val (start, end) = if (grain == "day") (d, d)
+      else (Date.valueOf(ld.withDayOfMonth(1)), Date.valueOf(ld.withDayOfMonth(ld.lengthOfMonth)))
     enrichedAll
       .filter(col("file_date").between(
-        date_sub(lit(mStart), retentionDays), date_add(lit(mEnd), retentionDays)))
-      .filter(date_trunc("month", Marts.dayKey).cast("date") === lit(mStart))
+        date_sub(lit(start), retentionDays), date_add(lit(end), retentionDays)))
+      .filter(Marts.period(dayFrom, grain) === lit(start))
+  }
+
+  /** The facts the daily municipality and UF marts of day `d` read. */
+  def martInput(enrichedAll: DataFrame, d: Date): DataFrame =
+    slice(enrichedAll, Marts.dayKey, "day", d)
+
+  private def requireKnown(marts: Set[String]): Unit = {
+    val unknown = marts -- allMarts
+    require(unknown.isEmpty, s"unknown mart(s) ${unknown.mkString(", ")}; " +
+      s"the marts are ${allMarts.mkString(", ")}")
   }
 
   /** EP1 steps 4–7 for one day: ingest → idempotent load → enrich → marts. */
@@ -237,7 +238,7 @@ final class Pipeline(spark: SparkSession, root: String,
     * resolver seam — Sources.resolveDaily feeds this directly). */
   def runDayFrom(raw: DataFrame, fileDate: LocalDate,
                  marts: Set[String] = allMarts.toSet): Map[String, Long] = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    requireKnown(marts)
     val d = Date.valueOf(fileDate)
 
     // E+T: CSV → curated records. Both load counts ride the write job as
@@ -295,7 +296,8 @@ final class Pipeline(spark: SparkSession, root: String,
       // from enriched re-enriches via newRowsOnly; an enriched row missing
       // from curated re-inserts via the anti-join and is NOT re-enriched
       // (its event_hash is already in `already`) — PipelineSpec pins both
-      // directions ("curatedDay union view…", "crash heal, enriched ahead…"). Column order matches the old read-back: data columns
+      // directions ("curatedDay union view…", "crash heal, enriched
+      // ahead…"). Column order matches the old read-back: data columns
       // first, partition column appended last. The file_date guard is
       // vacuous on the partition dir but pins the read-back's exact filter
       // semantics for `fresh`.
@@ -342,124 +344,67 @@ final class Pipeline(spark: SparkSession, root: String,
     }
   }
 
+  /** All mart names, in the reference's file order. */
+  val allMarts: Seq[String] = Marts.table.map(_.name)
+
   /** All marts for one day (delete-day-then-insert ≡ dynamic partition
     * overwrite; the hard-coded file order 10,11,20,21,30 + dashboard layer,
-    * src/etl/marts_runner.py:16-34). */
-  /** All mart names, in the reference's file order. */
-  val allMarts: Seq[String] = Seq(
-    "focos_diario_municipio", "focos_mensal_municipio",
-    "focos_diario_uf", "focos_mensal_uf",
-    "focos_diario_bioma", "focos_mensal_bioma",
-    "focos_diario_uc", "focos_mensal_uc",
-    "focos_diario_ti", "focos_mensal_ti",
-    "focos_diario_uf_trend", "mv_focos_day_dim")
-
-  /** `only`: rebuild a subset of marts — a backfill that touched one
-    * dimension doesn't pay for the other eleven tables (the reference's
-    * marts_runner applies whatever SQL files it is pointed at,
-    * src/etl/marts_runner.py:16-34). Default rebuilds everything. */
+    * src/etl/marts_runner.py:16-34). `only`: rebuild a subset of marts — a
+    * backfill that touched one dimension doesn't pay for the other eleven
+    * tables (the reference's marts_runner applies whatever SQL files it is
+    * pointed at). Default rebuilds everything; an unknown name fails. */
   def writeMarts(d: Date, only: Set[String] = allMarts.toSet): Unit = {
+    requireKnown(only)
     // Mart aggregates are day/month slices — a few thousand rows whatever
     // the corpus size. AQE's partition coalescing keeps their exchanges
     // task-efficient at any session parallelism (measured: pinning a
     // smaller shuffle-partition count here was indistinguishable from
     // letting AQE coalesce, so no knob).
     val enrichedAll = readTable("enriched")
-    // each slice feeds ~3 mart aggregates — cache for the duration of the
-    // rebuild so the enriched partitions are scanned once per slice, not
+    val chosen = Marts.table.filter(m => only(m.name))
+    // each slice feeds up to 3 mart aggregates — cache for the duration of
+    // the rebuild so the enriched partitions are scanned once per slice, not
     // once per mart. Slices are partition-bounded (one day / one month of
-    // facts), so the cache is O(batch), never O(history); released before
-    // returning. Lazy: a subset rebuild materializes only what it reads.
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def slice(df: DataFrame): DataFrame = { val c = df.cache(); cached += c; c }
-    lazy val dayFacts = slice(martInput(enrichedAll, d))
-    lazy val monthFacts = slice(monthInput(enrichedAll, d))
-    lazy val fileDateFacts = slice(enrichedAll.filter(col("file_date") === lit(d)))
-    lazy val monthFileFacts = slice(enrichedAll.filter(
-      date_trunc("month", col("file_date")).cast("date") ===
-        lit(Date.valueOf(d.toLocalDate.withDayOfMonth(1)))))
-    lazy val ufArea = ufAreaDim
-    // The twelve mart tables are INDEPENDENT writes to distinct paths (the
-    // one exception — the trend view reads the daily-UF mart — is ordered
-    // below), and each is a small aggregate job followed by driver-side
-    // commit/listing latency. Submitting them from a bounded pool overlaps
-    // one mart's driver latency with another's executor work instead of
-    // serializing ~12 × (plan + job + commit) — the §2.6 back-fill
-    // pattern; Spark's scheduler runs concurrent jobs FIFO, which is
-    // exactly the desired fill-the-tail behavior. 3 in flight is enough
-    // to hide the latency without the tiny aggregates fighting for cores.
-    // Job groups/descriptions are thread-local, so per-thread submission
-    // also keeps the UI attribution correct. Failures propagate: every
-    // future is awaited and the first throwable rethrown.
-    def mart(name: String)(build: => DataFrame, part: String = "day"): Unit =
-      if (only(name)) {
-        val b = build
-        Marts.writePartitioned(b, path(s"marts/$name"), part)
-        noteWrite(s"marts/$name", b, Seq(part))
+    // facts), so the cache is O(batch), never O(history); only the slices
+    // the chosen marts read are cached, and all are released before
+    // returning.
+    val slices = chosen.filter(_.over.isEmpty).map(m => (m.dayFrom, m.grain)).distinct
+      .map { case k @ (dayFrom, grain) => k -> slice(enrichedAll, dayFrom, grain, d).cache() }
+      .toMap
+    def write(m: Marts.Mart): Unit = {
+      val out = s"marts/${m.name}"
+      m.over match {
+        case Some(src) =>
+          val rows = m(readTable(s"marts/${src.name}"), ufAreaDim)
+          rows.write.mode("overwrite").parquet(path(out))
+          noteWrite(out, rows, Seq.empty)
+        case None =>
+          val rows = m(slices((m.dayFrom, m.grain)), ufAreaDim)
+          Marts.writePartitioned(rows, path(out), m.grain)
+          noteWrite(out, rows, Seq(m.grain))
       }
-    val bodies = scala.collection.mutable.Buffer[() => Unit]()
-    def submit(body: => Unit): Unit = bodies += (() => body)
+    }
+    // The marts are INDEPENDENT writes to distinct paths, and each is a
+    // small aggregate job followed by driver-side commit/listing latency.
+    // Submitting them from a bounded pool overlaps one mart's driver
+    // latency with another's executor work instead of serializing
+    // ~12 × (plan + job + commit) — the §2.6 back-fill pattern; Spark's
+    // scheduler runs concurrent jobs FIFO, which is exactly the desired
+    // fill-the-tail behavior. One task per family (its daily then its
+    // monthly mart; a view runs on its source's task, after it). 3 in
+    // flight is enough to hide the latency without the tiny aggregates
+    // fighting for cores. Job groups/descriptions are thread-local, so
+    // per-thread submission also keeps the UI attribution correct.
+    def family(m: Marts.Mart) = m.over.getOrElse(m).aggregate
+    val tasks = chosen.map(family).distinct.map(f => chosen.filter(family(_) == f))
     try {
-      // materialize the shared cached slices up front on THIS thread (the
-      // lazy vals are thread-safe but a racing first-use from two pool
-      // threads would serialize on the lazy-init lock while holding a
-      // running job); forcing the ones this rebuild reads keeps the pool
-      // threads to pure aggregate+write work. Referencing the lazy val is
-      // enough — the cache itself stays lazy Spark-side.
-      val needsDay = Seq("focos_diario_municipio", "focos_diario_uf",
-        "mv_focos_day_dim").exists(only)
-      val needsMonth = Seq("focos_mensal_municipio", "focos_mensal_uf").exists(only)
-      val needsFile = Seq("focos_diario_bioma", "focos_diario_uc",
-        "focos_diario_ti").exists(only)
-      val needsMonthFile = Seq("focos_mensal_bioma", "focos_mensal_uc",
-        "focos_mensal_ti").exists(only)
-      if (needsDay) dayFacts
-      if (needsMonth) monthFacts
-      if (needsFile) fileDateFacts
-      if (needsMonthFile) monthFileFacts
-      if (Seq("focos_diario_uf", "focos_mensal_uf").exists(only)) ufArea
-
-      submit {
-        mart("focos_diario_municipio")(Marts.focosDiarioMunicipio(dayFacts))
-        mart("focos_mensal_municipio")(Marts.focosMensalMunicipio(monthFacts), "month")
-      }
-      submit {
-        mart("focos_diario_uf")(Marts.focosDiarioUf(dayFacts, ufArea))
-        mart("focos_mensal_uf")(Marts.focosMensalUf(monthFacts, ufArea), "month")
-        // trend view over the (small) daily UF mart — W1/W2 moving
-        // averages; stays on the SAME task as its input mart's write
-        if (only("focos_diario_uf_trend")) {
-          val trend = Marts.focosDiarioUfTrend(readTable("marts/focos_diario_uf"))
-          trend.write.mode("overwrite").parquet(path("marts/focos_diario_uf_trend"))
-          noteWrite("marts/focos_diario_uf_trend", trend, Seq.empty)
-        }
-      }
-      // biome/UC/TI marts key on raw file_date (40/50/60_*.sql — §7.4 risk 5)
-      submit {
-        mart("focos_diario_bioma")(Marts.focosDiarioBioma(fileDateFacts))
-        mart("focos_mensal_bioma")(Marts.focosMensalBioma(monthFileFacts), "month")
-      }
-      submit {
-        mart("focos_diario_uc")(Marts.focosDiarioKeyed(fileDateFacts, "cd_cnuc", Seq("uc_nome")))
-        mart("focos_mensal_uc")(Marts.focosMensalKeyed(monthFileFacts, "cd_cnuc", Seq("uc_nome")), "month")
-      }
-      submit {
-        mart("focos_diario_ti")(Marts.focosDiarioKeyed(fileDateFacts, "terrai_cod", Seq("ti_nome")))
-        mart("focos_mensal_ti")(Marts.focosMensalKeyed(monthFileFacts, "terrai_cod", Seq("ti_nome")), "month")
-      }
-      // fact cube for the serving layer (065_mv_focos_day_dim.sql) — cd_uf is
-      // the UF code column the reference denormalizes; our dims carry uf text
-      submit {
-        mart("mv_focos_day_dim")(
-          Marts.factCube(dayFacts.withColumn("cd_uf", col("mun_uf"))))
-      }
-      // 3 in flight (Pipeline.inParallel awaits ALL before surfacing the
-      // first failure, so no write is still in flight when the caller sees
-      // the exception or the unpersist below runs)
-      Pipeline.inParallel(bodies.toSeq, threads = 3)
+      // Pipeline.inParallel awaits ALL before surfacing the first failure,
+      // so no write is still in flight when the caller sees the exception
+      // or the unpersist below runs
+      Pipeline.inParallel(tasks.map(ms => () => ms.foreach(write)), threads = 3)
       ()
     } finally {
-      cached.foreach(_.unpersist(false))
+      slices.values.foreach(_.unpersist(false))
     }
   }
 
@@ -468,7 +413,6 @@ final class Pipeline(spark: SparkSession, root: String,
     * 21_enrich_biomas_ucs_tis.sql:17-27), then overwrite the day partition.
     * Used when a dimension arrives after facts were first enriched. */
   def reenrichDay(fileDate: LocalDate): Long = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val d = Date.valueOf(fileDate)
     val day = readTable("enriched").filter(col("file_date") === lit(d))
     val unchecked = day.filter(
@@ -485,7 +429,8 @@ final class Pipeline(spark: SparkSession, root: String,
       val tmp = path(s"enriched_tmp_$fileDate")
       out.write.mode("overwrite").parquet(tmp)
       val rewritten = spark.read.parquet(tmp).withColumn("file_date", lit(d))
-      rewritten.write.mode("overwrite").partitionBy("file_date").parquet(path("enriched"))
+      rewritten.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("file_date").parquet(path("enriched"))
       noteWrite("enriched", rewritten)
       // Hadoop FS delete, not java.io: with an HDFS/S3 root a local-FS
       // delete silently no-ops and enriched_tmp_* datasets leak forever
@@ -522,8 +467,8 @@ final class Pipeline(spark: SparkSession, root: String,
       () => readTable("enriched").filter(col("file_date") === lit(d)).count(),
       () => martInput(readTable("enriched"), d)
         .filter(col("mun_cd_mun").isNotNull).count(),
-      () => martSum("focos_diario_municipio", "n_focos"),
-      () => martSum("focos_diario_uf", "n_focos")))
+      () => martSum(Marts.diarioMunicipio.name, "n_focos"),
+      () => martSum(Marts.diarioUf.name, "n_focos")))
     if (nCur != nEnr) errs += s"curated($nCur) != enriched($nEnr) for $fileDate"
     if (withMun != munSum) errs += s"mun mart sum($munSum) != enriched with mun($withMun) for $fileDate"
     if (munSum != ufSum) errs += s"uf mart sum($ufSum) != mun mart sum($munSum) for $fileDate"
@@ -572,6 +517,7 @@ final class Pipeline(spark: SparkSession, root: String,
   def backfill(start: LocalDate, end: LocalDate, csvFor: LocalDate => DataFrame,
                resume: Boolean = false, checks: Boolean = true,
                marts: Set[String] = allMarts.toSet): Seq[LocalDate] = {
+    requireKnown(marts)
     val from = if (resume) readState().map(_.plusDays(1)).getOrElse(start) else start
     val done = scala.collection.mutable.Buffer[LocalDate]()
     var cur = from

@@ -357,6 +357,179 @@ class PipelineSpec extends AnyFunSuite {
     assert(tot == 15 && ts == 15 && byUf == 15)
   }
 
+  /** Two file days either side of a month boundary. Day 2024-01-31 carries a
+    * view day before its file day, a null and an unparsable `view_ts` and a
+    * point outside every dimension; day 2024-02-01 carries a view day in the
+    * previous MONTH, so the view-day and file-day keys differ at both grains. */
+  private def writeGoldenCsv(dir: Path, day: LocalDate): String = {
+    val rows = day.toString match {
+      case "2024-01-31" => Seq(
+        "2,5;1,5;2024-01-31 12:00:00;AQUA", // Alpha, UC
+        "3,5;7,5;2024-01-30 23:50:00;TERRA", // Alpha, TI; view day before file day
+        "1,5;11,5;;AQUA", // Beta; null view_ts
+        "8,5;15,5;31/01/2024 13:00;TERRA", // Beta; unparsable view_ts
+        "5,0;25,0;2024-01-31 14:00:00;AQUA") // outside every dimension
+      case "2024-02-01" => Seq(
+        "4,5;4,4;2024-01-31 23:30:00;AQUA", // Alpha, UC; view day in January
+        "2,2;1,2;2024-02-01 10:00:00;AQUA", // Alpha, UC
+        "6,5;16,5;2024-02-01 11:00:00;TERRA", // Beta
+        "3,3;8,8;;AQUA") // Alpha, TI; null view_ts
+    }
+    val f = dir.resolve(s"golden-$day.csv")
+    Files.writeString(f, "latitude;longitude;data_hora_gmt;satelite\n" +
+      rows.map(_ + "\n").mkString)
+    f.toString
+  }
+
+  /** Every stored mart after two days and a rebuild of the first day's
+    * marts (which then sees the second file's January view-day row):
+    * schema as name:type in stored order, and the rows sorted as strings. */
+  test("golden marts: the twelve stored marts over cross-day and " +
+    "cross-month view days, null and unparsable view_ts") {
+    val dir = Files.createTempDirectory("graft_golden_marts")
+    val root = dir.resolve("wh").toString
+    val p = new Pipeline(spark, root, municipios, biomas, Some(ucs), Some(tis))
+    val (jan31, feb1) = (LocalDate.parse("2024-01-31"), LocalDate.parse("2024-02-01"))
+    p.runDay(writeGoldenCsv(dir, jan31), jan31)
+    p.runDay(writeGoldenCsv(dir, feb1), feb1)
+    p.writeMarts(java.sql.Date.valueOf(jan31))
+    def stored(name: String): (String, Seq[String]) = {
+      val df = spark.read.parquet(s"$root/marts/$name")
+      (df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(","),
+        df.collect().map(_.toSeq.mkString("|")).toSeq.sorted)
+    }
+    val mun = "mun_cd_mun:string,mun_nm_mun:string,mun_uf:string," +
+      "mun_area_km2:double,n_focos:bigint,focos_por_100km2:decimal(37,4)"
+    val uf = "uf:string,n_focos:bigint,uf_area_km2:double,focos_por_100km2:decimal(37,4)"
+    val golden: Map[String, (String, Seq[String])] = Map(
+      "focos_diario_municipio" -> (s"$mun,day:date", Seq(
+        "1100015|Alpha|RO|5000.0|2|0.0400|2024-01-31",
+        "1100015|Alpha|RO|5000.0|2|0.0400|2024-02-01",
+        "1100023|Beta|AC|7000.0|1|0.0143|2024-02-01",
+        "1100023|Beta|AC|7000.0|2|0.0286|2024-01-31")),
+      "focos_mensal_municipio" -> (s"$mun,month:date", Seq(
+        "1100015|Alpha|RO|5000.0|2|0.0400|2024-02-01",
+        "1100015|Alpha|RO|5000.0|3|0.0600|2024-01-01",
+        "1100023|Beta|AC|7000.0|1|0.0143|2024-02-01",
+        "1100023|Beta|AC|7000.0|2|0.0286|2024-01-01")),
+      "focos_diario_uf" -> (s"$uf,day:date", Seq(
+        "AC|1|7000.0|0.0143|2024-02-01",
+        "AC|2|7000.0|0.0286|2024-01-31",
+        "RO|2|5000.0|0.0400|2024-01-31",
+        "RO|2|5000.0|0.0400|2024-02-01")),
+      "focos_mensal_uf" -> (s"$uf,month:date", Seq(
+        "AC|1|7000.0|0.0143|2024-02-01",
+        "AC|2|7000.0|0.0286|2024-01-01",
+        "RO|2|5000.0|0.0400|2024-02-01",
+        "RO|3|5000.0|0.0600|2024-01-01")),
+      "focos_diario_bioma" -> ("cd_bioma:string,bioma:string,focos:int,day:date", Seq(
+        "1|Amazonia|4|2024-01-31",
+        "1|Amazonia|4|2024-02-01")),
+      "focos_mensal_bioma" -> ("cd_bioma:string,bioma:string,focos:int,month:date", Seq(
+        "1|Amazonia|4|2024-01-01",
+        "1|Amazonia|4|2024-02-01")),
+      "focos_diario_uc" -> ("cd_cnuc:string,uc_nome:string,focos:int,day:date", Seq(
+        "42|UC X|1|2024-01-31",
+        "42|UC X|2|2024-02-01")),
+      "focos_mensal_uc" -> ("cd_cnuc:string,uc_nome:string,focos:int,month:date", Seq(
+        "42|UC X|1|2024-01-01",
+        "42|UC X|2|2024-02-01")),
+      "focos_diario_ti" -> ("terrai_cod:string,ti_nome:string,focos:int,day:date", Seq(
+        "7|TI Y|1|2024-01-31",
+        "7|TI Y|1|2024-02-01")),
+      "focos_mensal_ti" -> ("terrai_cod:string,ti_nome:string,focos:int,month:date", Seq(
+        "7|TI Y|1|2024-01-01",
+        "7|TI Y|1|2024-02-01")),
+      "focos_diario_uf_trend" ->
+        ("day:date,uf:string,n_focos:bigint,ma7:decimal(31,2),ma30:decimal(31,2)", Seq(
+          "2024-01-31|AC|2|2.00|2.00",
+          "2024-01-31|RO|2|2.00|2.00",
+          "2024-02-01|AC|1|1.50|1.50",
+          "2024-02-01|RO|2|2.00|2.00")),
+      "mv_focos_day_dim" -> ("uf:string,cd_uf:string,cd_mun:string,mun_nm_mun:string," +
+        "bioma:string,cd_bioma:string,uc_nome:string,cd_cnuc:string,ti_nome:string," +
+        "terrai_cod:string,n_focos:bigint,day:date", Seq(
+          "AC|AC|1100023|Beta|Amazonia|1|null|null|null|null|1|2024-02-01",
+          "AC|AC|1100023|Beta|Amazonia|1|null|null|null|null|2|2024-01-31",
+          "RO|RO|1100015|Alpha|Amazonia|1|UC X|42|null|null|1|2024-02-01",
+          "RO|RO|1100015|Alpha|Amazonia|1|UC X|42|null|null|2|2024-01-31",
+          "RO|RO|1100015|Alpha|Amazonia|1|null|null|TI Y|7|1|2024-02-01",
+          "null|null|null|null|null|null|null|null|null|null|1|2024-01-31")))
+    assert(p.allMarts.toSet == golden.keySet)
+    for ((name, want) <- golden) assert(stored(name) == want, name)
+  }
+
+  test("writeMarts subset: one named mart is the only table written, and no " +
+    "cached slice outlives the call") {
+    val dir = Files.createTempDirectory("graft_mart_subset")
+    val root = dir.resolve("wh").toString
+    val p = new Pipeline(spark, root, municipios, biomas, Some(ucs), Some(tis))
+    p.runDay(writeDailyCsv(dir, d1), d1) // default: every mart
+    // a slice the call caches is materialized by its aggregate, so a leaked
+    // one stays among the persisted RDDs
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val p2 = new Pipeline(spark, dir.resolve("wh2").toString, municipios, biomas,
+      Some(ucs), Some(tis))
+    p2.runDayFrom(Ingest.readCsv(spark, writeDailyCsv(dir, d1)), d1, Set.empty)
+    assert(!Files.exists(dir.resolve("wh2/marts")))
+    p2.writeMarts(java.sql.Date.valueOf(d1), Set("focos_mensal_ti"))
+    val written = Files.list(dir.resolve("wh2/marts")).toArray.map(_.toString.split('/').last)
+    assert(written.toSeq == Seq("focos_mensal_ti"))
+    assert(spark.read.parquet(s"$root/marts/focos_mensal_ti").collect().toSet ==
+      spark.read.parquet(dir.resolve("wh2/marts/focos_mensal_ti").toString).collect().toSet)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "writeMarts left a cached frame behind")
+  }
+
+  test("unknown mart names fail before anything is written; an empty set is valid") {
+    val dir = Files.createTempDirectory("graft_mart_names")
+    val root = dir.resolve("wh").toString
+    val p = new Pipeline(spark, root, municipios, biomas, Some(ucs), Some(tis))
+    val typo = Set("focos_diario_municpio")
+    val csv = writeDailyCsv(dir, d1)
+    for (call <- Seq[() => Any](
+      () => p.writeMarts(java.sql.Date.valueOf(d1), typo),
+      () => p.runDayFrom(Ingest.readCsv(spark, csv), d1, typo),
+      () => p.backfill(d1, d1, _ => Ingest.readCsv(spark, csv), marts = typo))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("focos_diario_municpio"))
+    }
+    assert(!Files.exists(dir.resolve("wh")), "a failed call wrote to the warehouse")
+    assert(p.runDayFrom(Ingest.readCsv(spark, csv), d1, Set.empty)("inserted") == 5)
+    assert(!Files.exists(dir.resolve("wh/marts")))
+  }
+
+  test("a re-run day replaces exactly its own mart partitions in a session " +
+    "left at static overwrite, and leaves the session conf as it was") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try {
+      val dir = Files.createTempDirectory("graft_static_overwrite")
+      val root = dir.resolve("wh").toString
+      val p = new Pipeline(spark, root, municipios, biomas, Some(ucs), Some(tis))
+      val d2 = d1.plusDays(1)
+      p.runDay(writeDailyCsv(dir, d1), d1)
+      p.runDay(writeDailyCsv(dir, d2), d2)
+      def days(mart: String): Map[String, Long] =
+        spark.read.parquet(s"$root/marts/$mart").groupBy(col("day").cast("string"))
+          .agg(sum("n_focos")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(days("focos_diario_municipio") == Map(s"$d1" -> 5L, s"$d2" -> 5L))
+      // the late file for d1 adds one row; the re-run rebuilds d1 only
+      val late = dir.resolve(s"$d1-late.csv")
+      Files.writeString(late, "latitude;longitude;data_hora_gmt;satelite\n" +
+        s"9,1;2,2;$d1 18:00:00;AQUA\n")
+      assert(p.runDay(late.toString, d1)("inserted") == 1)
+      for (m <- Seq("focos_diario_municipio", "focos_diario_uf", "mv_focos_day_dim"))
+        assert(days(m) == Map(s"$d1" -> 6L, s"$d2" -> 5L), m)
+      assert(spark.read.parquet(s"$root/marts/focos_mensal_uf").agg(sum("n_focos"))
+        .head.getLong(0) == 11)
+      assert(p.reenrichDay(d1) == 0)
+      assert(spark.conf.get(key) == "static")
+      assert(p.checkDay(d1).isEmpty && p.checkDay(d2).isEmpty)
+    } finally spark.conf.set(key, before)
+  }
+
   test("A7 period stats: single-pass max_by peak over the daily UF mart") {
     import graft.marts.Marts
     val (_, root, _) = fixture
