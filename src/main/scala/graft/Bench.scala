@@ -154,8 +154,9 @@ object Bench {
       // same artifact post-shuffle: AQE's coalescer targets its 1 MiB
       // minPartitionSize floor, which packs a sf0.1-sized shuffle (~2-3 MiB)
       // into 1-3 partitions and serializes the CPU-heavy stage after it
-      // (tokenize/window/agg ran 0.5-0.9 s on one core of 32, measured via
-      // SPARK_GRAFT_DEBUG_JOBS=2). At cluster scale partitions are far above
+      // (tokenize/window/agg ran 0.5-0.9 s on one core of 32: compare a
+      // row's layers spark.executor_run_s with spark.tasks and its wall
+      // time). At cluster scale partitions are far above
       // any floor, so only the local bench needs it lowered.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // see Queries.fanOut: repartition ahead of CPU-heavy per-row stages to
@@ -221,63 +222,8 @@ object Bench {
     // multi-minute warmup, with no artifact written
     val repeat = math.max(1,
       sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(2))
-    // diagnostic listener (SPARK_GRAFT_DEBUG_JOBS=1): per-query job/stage/
-    // task counts + summed task wall-time, to split scheduler/plan fixed
-    // cost from actual execution when a small-SF one-shot number looks slow
-    val dbg = sys.env.contains("SPARK_GRAFT_DEBUG_JOBS")
-    val jobC = new java.util.concurrent.atomic.AtomicLong(0)
-    val stageC = new java.util.concurrent.atomic.AtomicLong(0)
-    val taskC = new java.util.concurrent.atomic.AtomicLong(0)
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    if (dbg) spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      // level 3: per-JOB wall + inter-job driver gap + callsite — the view
-      // that splits "many tiny jobs with driver latency between them" from
-      // "few slow jobs" on lifecycle rows
-      val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-      val lastEnd = new java.util.concurrent.atomic.AtomicLong(0)
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobC.incrementAndGet()
-        if (sys.env.get("SPARK_GRAFT_DEBUG_JOBS").contains("3")) {
-          val exec = Option(j.properties)
-            .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).getOrElse("-")
-          val site = j.stageInfos.lastOption.map(_.name.take(70)).getOrElse("?")
-          jobStart.put(j.jobId, (j.time, s"exec=$exec $site"))
-        }
-        ()
-      }
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        if (sys.env.get("SPARK_GRAFT_DEBUG_JOBS").contains("3")) {
-          val (st, site) = Option(jobStart.remove(j.jobId)).getOrElse((j.time, "?"))
-          // first job: no previous end — gap is 0, not an epoch-sized delta
-          val prev = lastEnd.getAndSet(j.time)
-          val gap = if (prev == 0L) 0L else st - prev
-          System.err.println(f"[job-dbg] job=${j.jobId}%4d wall=${(j.time - st) / 1000.0}%.3fs " +
-            f"gapBefore=${math.max(0L, gap) / 1000.0}%.3fs $site")
-        }
-        ()
-      }
-      override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stageC.incrementAndGet()
-        if (sys.env.get("SPARK_GRAFT_DEBUG_JOBS").contains("2")) {
-          val i = s.stageInfo
-          val ms = i.taskMetrics
-          System.err.println(
-            f"[stage-dbg] ${i.stageId}%4d tasks=${i.numTasks}%3d " +
-              f"run=${ms.executorRunTime / 1000.0}%.2fs " +
-              f"cpu=${ms.executorCpuTime / 1e9}%.2fs " +
-              f"deser=${ms.executorDeserializeTime / 1000.0}%.2fs " +
-              f"gc=${ms.jvmGCTime / 1000.0}%.2fs " +
-              f"fetchWait=${ms.shuffleReadMetrics.fetchWaitTime / 1000.0}%.2fs " +
-              f"writeT=${ms.shuffleWriteMetrics.writeTime / 1e9}%.2fs ${i.name.take(90)}")
-        }
-        ()
-      }
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        taskC.incrementAndGet()
-        if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
-        ()
-      }
-    })
+    // per-row layer metrics of the one-shot run (file artifacts only)
+    val metrics = RunMetrics.setup(spark)
     // In-loop degradation canary (round-15): the serial/parallel host
     // probes run BEFORE the query loop, so a heavy-tail stall phase that
     // starts mid-run (the BENCH_r14 failure mode: probes near-normal,
@@ -329,13 +275,7 @@ object Bench {
           org.apache.spark.sql.execution.FormattedMode))
         catch { case e: Throwable => System.err.println(s"explain failed: $e") }
       }
-      if (dbg) { jobC.set(0); stageC.set(0); taskC.set(0); taskMs.set(0) }
-      // snapshot debug counters after the FIRST iteration: wall= prints the
-      // first-run time, so the counters beside it must be first-run too —
-      // letting them accumulate across repeats printed ~repeat× the task
-      // time against a single run's wall
-      var dbgSnap = (0L, 0L, 0L, 0L)
-      val times = (1 to repeat).map { it =>
+      def run(): Double = {
         val t0 = System.nanoTime()
         val ok =
           try { consume(fn(spark, sfDir)); true } catch {
@@ -343,31 +283,22 @@ object Bench {
               System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
               false
           }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        if (dbg && it == 1) {
-          // listener events are delivered async on the bus — snapshotting
-          // the instant the action returns can under-count under load.
-          // No public drain API, so a short settle sleep (dbg-only, and
-          // AFTER `elapsed` is captured so it never pollutes the timing).
-          Thread.sleep(150)
-          dbgSnap = (jobC.get, stageC.get, taskC.get, taskMs.get)
-        }
-        if (ok) elapsed else Double.PositiveInfinity
+        // a failed iteration must never masquerade as a (fast) timing; if
+        // every iteration failed, report -1 so the JSON is loud too
+        if (ok) (System.nanoTime() - t0) / 1e9 else Double.PositiveInfinity
       }
-      // a failed iteration must never masquerade as a (fast) timing; if
-      // every iteration failed, report -1 so the JSON is loud too
-      if (dbg) System.err.println(
-        f"[bench-dbg] $name jobs=${dbgSnap._1} stages=${dbgSnap._2} " +
-          f"tasks=${dbgSnap._3} taskTime=${dbgSnap._4 / 1000.0}%.1fs " +
-          f"wall=${times.head}%.2fs")
+      // the one-shot run is the measured interval, so its layer metrics
+      // describe exactly the time reported in "queries"
+      val (first, layers) = metrics.measure(run())
+      val times = first +: (2 to repeat).map(_ => run())
       def clean(v: Double) = if (v.isInfinity) -1.0 else v
       // "queries"/"value" are the FIRST run — the one-shot contract every
       // round has reported; best-of-rest is the steady-state split
       (name, clean(times.head),
-        if (times.size > 1) clean(times.tail.min) else -1.0)
+        if (times.size > 1) clean(times.tail.min) else -1.0, layers)
     }
     sampleCanary()
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // the headline total sums PASSING rows only: folding the -1 failure
     // sentinels in would make a lost row read as a speedup in any
@@ -379,7 +310,7 @@ object Bench {
       .map(v => String.format(java.util.Locale.ROOT, "%.4f", Double.box(v)))
       .mkString("[", ",", "]")
     val steadySuffix = if (repeat > 1) {
-      val ss = results.map { case (k, _, s) => s"\"" + k + "\":" + s }
+      val ss = results.map { case (k, _, s, _) => s"\"" + k + "\":" + s }
         .mkString("{", ",", "}")
       s""","steady":$ss"""
     } else ""
@@ -394,15 +325,24 @@ object Bench {
       "shares the enriched-fact proxy) charge the build to " +
       "the alphabetically first consumer, so such one-shot rows are not " +
       "independent measurements"
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","bench_schema":2,"host_probe_sec":$hostProbe,"host_probe_par_sec":$hostProbePar,"canary_sec":$canaryJson,"degraded":$degraded,"timing_contract":"$contract","queries":$qs$steadySuffix,"sf":"$sfDir"}"""
+    val fields = s"""{"metric":"total","value":$total,"unit":"sec","bench_schema":2,"host_probe_sec":$hostProbe,"host_probe_par_sec":$hostProbePar,"canary_sec":$canaryJson,"degraded":$degraded,"timing_contract":"$contract","queries":$qs$steadySuffix,"sf":"$sfDir""""
+    val line = fields + "}"
+    // per-row RunMetrics of the one-shot run: file copies only, since a
+    // full run's layers would overflow the byte-bounded stdout capture
+    val layersJson = results.map { case (k, _, _, m) =>
+      s"\"$k\":" + m.toSeq.sorted.map { case (mk, v) =>
+        s"\"$mk\":" + java.math.BigDecimal.valueOf(v).stripTrailingZeros.toPlainString
+      }.mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
+    val fileLine = fields + s""","layers":$layersJson}"""
     if (degraded) System.err.println(
       s"[bench] DEGRADED WINDOW: canary series $canaryJson has a sample " +
         "> 3x its minimum — treat every row in this artifact as suspect")
     // self-preserving artifact: the driver's stdout capture tail-truncates
     // on a full 210-row run (BENCH_r12 lost ~150 per-query numbers to
-    // "parsed": null), so the full line is ALSO written to a file that a
-    // later commit can preserve for cross-round comparison. stdout keeps
-    // the one-JSON-line contract unchanged.
+    // "parsed": null), so the full line, with the layers map, is ALSO
+    // written to a file that a later commit can preserve for cross-round
+    // comparison. stdout keeps the one-JSON-line contract unchanged.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
     // TWO copies: the mutable bench_last.json pointer (cheap to find), and
     // a timestamp-stamped immutable file under bench/ — bench_last.json is
@@ -428,7 +368,7 @@ object Bench {
         // artifact path must not overwrite each other's tmp file)
         val tmp = pth.resolveSibling(
           s"${pth.getFileName}.${ProcessHandle.current().pid()}.tmp")
-        java.nio.file.Files.write(tmp, (line + "\n").getBytes("UTF-8"))
+        java.nio.file.Files.write(tmp, (fileLine + "\n").getBytes("UTF-8"))
         try java.nio.file.Files.move(tmp, pth,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)

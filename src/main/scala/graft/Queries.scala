@@ -70,8 +70,9 @@ object Queries {
     * The local bench tables are single parquet files with ONE row group, so
     * however many byte-range splits `files.minPartitionNum` makes, every row
     * lands in the split holding the row group's midpoint and the whole
-    * scan-side pipeline runs on one core of 32 (measured 0.45-0.65 s stages
-    * under SPARK_GRAFT_DEBUG_JOBS=2). A real corpus — many files, many row
+    * scan-side pipeline runs on one core of 32 (measured 0.45-0.65 s stages;
+    * in a bench row's `layers` it shows as `spark.executor_run_s` near the
+    * row's wall time). A real corpus — many files, many row
     * groups — never has this shape, and DuckDB parallelizes the very same
     * file sub-row-group, so the baseline comparison is otherwise 1-vs-32
     * threads on exactly the CPU-bound stages.

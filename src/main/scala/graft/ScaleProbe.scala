@@ -193,26 +193,10 @@ object ScaleProbe {
       )
     }
 
-    // per-probe task-level counters: the largest single task's peak
-    // execution memory (a task accumulating corpus-sized state shows up
-    // here regardless of wall time) and total spilled bytes (time-linear-
-    // by-spilling shows up here); drained via ListenerBridge.flush before
-    // each read — listener delivery is asynchronous
-    val taskPeak = new java.util.concurrent.atomic.AtomicLong(0)
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          taskPeak.accumulateAndGet(m.peakExecutionMemory, math.max(_, _))
-          spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        }
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
+    // per-probe peak memory of the largest single task (a task
+    // accumulating corpus-sized state shows up here regardless of wall
+    // time) and total spilled bytes (time-linear-by-spilling shows up here)
+    val metrics = RunMetrics.setup(spark)
     final case class Measured(t: Double, mem: Long, spill: Long)
     // operator-internal persists accumulate across probes (CacheRegistry
     // is session-scoped) — release after every measurement so each op is
@@ -221,29 +205,26 @@ object ScaleProbe {
     // persisted frames are still alive.
     def timed(f: () => Long): Measured =
       try {
-        taskPeak.set(0); spillBytes.set(0)
-        val t = time(f())
-        val cached = spark.sparkContext.getRDDStorageInfo
-          .map(_.memSize).sum
-        org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
-        Measured(t, cached + taskPeak.get, spillBytes.get)
+        val ((t, cached), m) = metrics.measure {
+          (time(f()), spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum)
+        }
+        Measured(t, cached + m("spark.peak_task_mem_bytes").toLong,
+          m("spark.spill_bytes").toLong)
       } finally graft.CacheRegistry.unpersistAll(spark, blocking = true)
     def selected(k: Int) =
       if (only.isEmpty) probes(k)
       else probes(k).filter { case (n, _) => only.contains(n) }
-    try {
-      // warm the JVM/codegen on the 1× shapes before timing anything
-      selected(1).foreach { case (_, f) =>
-        try f() catch { case _: Throwable => }
-        graft.CacheRegistry.unpersistAll(spark, blocking = true)
-      }
-      val t1 = selected(1).map { case (n, f) => n -> timed(f) }.toMap
-      val tn = selected(mult).map { case (n, f) => n -> timed(f) }
-      tn.map { case (n, m) =>
-        val m1 = t1(n)
-        Timing(n, m1.t, m.t, m1.mem, m.mem, m1.spill, m.spill)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // warm the JVM/codegen on the 1× shapes before timing anything
+    selected(1).foreach { case (_, f) =>
+      try f() catch { case _: Throwable => }
+      graft.CacheRegistry.unpersistAll(spark, blocking = true)
+    }
+    val t1 = selected(1).map { case (n, f) => n -> timed(f) }.toMap
+    val tn = selected(mult).map { case (n, f) => n -> timed(f) }
+    tn.map { case (n, m) =>
+      val m1 = t1(n)
+      Timing(n, m1.t, m.t, m1.mem, m.mem, m1.spill, m.spill)
+    }
   }
 
   /** Scan-layout probe: the SAME rows written as one single-row-group

@@ -22,11 +22,11 @@ import graft.functions.GeoFunctions
   */
 object Enrich {
 
-  private def bboxPre(lonC: Column, latC: Column): Column =
+  private[graft] def bboxPre(lonC: Column, latC: Column): Column =
     lonC >= col("min_lon") && lonC <= col("max_lon") &&
       latC >= col("min_lat") && latC <= col("max_lat")
 
-  private def pip(lonC: Column, latC: Column): Column =
+  private[graft] def pip(lonC: Column, latC: Column): Column =
     GeoFunctions.pointInMultiPolygon(lonC, latC, col("geom"))
 
   /** J2+J3 — municipality enrichment: exact PIP first; for the remainder,

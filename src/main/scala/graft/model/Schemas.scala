@@ -11,19 +11,6 @@ import org.apache.spark.sql.types._
   */
 object Schemas {
 
-  /** One fire detection, curated grain (src/etl/load/postgis.py:51-63). */
-  final case class FocoRecord(
-    event_hash: String,
-    file_date: java.sql.Date,
-    lat: Double,
-    lon: Double,
-    view_ts: String, // deliberately text; cast-with-fallback at query time
-    satelite: String,
-    municipio: String,
-    uf: String,
-    bioma: String,
-    props: String)
-
   val multiPolygonType: DataType =
     ArrayType(ArrayType(ArrayType(ArrayType(DoubleType))))
 
@@ -40,12 +27,4 @@ object Schemas {
   val municipioSchema: StructType =
     dimSchema("cd_mun", "nm_mun", Seq(
       StructField("uf", StringType), StructField("area_km2", DoubleType)))
-
-  val curatedSchema: StructType = StructType(Seq(
-    StructField("event_hash", StringType, nullable = false),
-    StructField("file_date", DateType, nullable = false),
-    StructField("lat", DoubleType), StructField("lon", DoubleType),
-    StructField("view_ts", StringType), StructField("satelite", StringType),
-    StructField("municipio", StringType), StructField("uf", StringType),
-    StructField("bioma", StringType), StructField("props", StringType)))
 }

@@ -804,8 +804,6 @@ object Dedup {
           deferredRelease = hop1Ckpt.toList
           converged = true
           iter += 1
-          if (sys.env.contains("GRAFT_CC_DEBUG"))
-            System.err.println(s"[cc] round $iter changed=0 (hop1 early exit) t=${System.nanoTime() / 1000000}")
         } else {
           // Hop 2: a SECOND neighbor-min in the same round. The per-round
           // cost is dominated by fixed driver overhead (plan analysis, the
@@ -843,8 +841,6 @@ object Dedup {
           deferredRelease = prevCkpt.toList ++ hop1Ckpt.toList ++ hop2Ckpt.toList
           prevCkpt = ckptRdd(labels)
           iter += 1
-          if (sys.env.contains("GRAFT_CC_DEBUG"))
-            System.err.println(s"[cc] round $iter hop1Changed=$chg1 t=${System.nanoTime() / 1000000}")
         }
       }
     } finally {

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.enrich.Enrich
+
 /** Structured Streaming jobs. The reference has no true streams — its
   * incremental model is per-day batches with a resumable state file
   * (SURVEY §2.10) — but the engine offers the streaming-native equivalents:
@@ -527,13 +529,9 @@ object StreamingJobs {
     */
   def enrichPoints(points: DataFrame, dim: DataFrame,
                    watermark: String = "1 day"): DataFrame = {
-    val pip = graft.functions.GeoFunctions.pointInMultiPolygon(
-      col("lon"), col("lat"), col("geom"))
-    val bboxPre =
-      col("lon") >= col("min_lon") && col("lon") <= col("max_lon") &&
-        col("lat") >= col("min_lat") && col("lat") <= col("max_lat")
+    val (lon, lat) = (col("lon"), col("lat"))
     points.withWatermark("ts", watermark)
-      .join(broadcast(dim), bboxPre && pip, "left")
+      .join(broadcast(dim), Enrich.bboxPre(lon, lat) && Enrich.pip(lon, lat), "left")
       .drop("geom", "min_lon", "min_lat", "max_lon", "max_lat")
       .dropDuplicatesWithinWatermark("event_hash")
   }
@@ -752,15 +750,6 @@ object StreamingJobs {
         .option("checkpointLocation", s"$dir/ckpt")
         .trigger(Trigger.AvailableNow()).start()
       try q.awaitTermination() finally q.stop()
-      // SPARK_GRAFT_DEBUG_STREAM=1: per-drain micro-batch duration
-      // breakdown (where a drain's fixed cost actually goes — trigger
-      // execution vs offset/commit WAL vs state commit), for the same
-      // measure-don't-guess loop SPARK_GRAFT_DEBUG_JOBS gives batch jobs
-      if (sys.env.contains("SPARK_GRAFT_DEBUG_STREAM"))
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[drain-dbg] $name batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-        }
       stream.schema
     }
     val outSchema = withDrainParallelism(spark) {
