@@ -12,9 +12,10 @@ object SparkEntry {
   /** `spark.sql.codegen.cache.maxEntries` for the engine's own mains
     * (Bench, Verify, ScaleProbe, ScaleGen). A static conf, so it goes on
     * the session builder. Spark's default of 100 generated classes is
-    * smaller than one pipeline day's working set (~128 distinct classes),
-    * so the cache evicts classes it is about to need: in one day step 141
-    * of 146 compiles were byte-identical recompiles. */
+    * smaller than one pipeline day's working set (~117 distinct classes
+    * with the one-pass mart rebuild), so the cache evicts classes it is
+    * about to need. Host sessions the engine runs inside, such as
+    * perfbench's, keep Spark's default of 100 and pay those recompiles. */
   val CodegenCacheMaxEntries = 5000
 
   /** Session settings every entry point needs: ANSI off (the reference's

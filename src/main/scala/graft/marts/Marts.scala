@@ -1,15 +1,21 @@
 package graft.marts
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.sql.Date
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, StructType}
 
 /** Aggregate marts (SURVEY §2.4) with the reference's exact key semantics.
   *
   * [[Marts.table]] is the one place to add a mart: one entry per stored
   * table, in the reference's file order (src/etl/marts_runner.py:16-34).
-  * `Pipeline.writeMarts` builds, slices, caches and schedules from it alone.
+  * `Pipeline.writeMarts` builds and schedules from it alone.
   *
   * Each family takes its day from one column — two different day keys,
   * deliberately copied, not "fixed" (§7.4 risk 5):
@@ -22,10 +28,15 @@ import org.apache.spark.sql.types.DecimalType
   * Ratio columns use Decimal arithmetic to match Postgres `numeric`
   * rounding (§7.4 risk 3).
   *
-  * Scale: every mart is a single hash-aggregate over the enriched fact;
-  * partial aggregation halves shuffle volume; output tables are written
-  * partitioned by day/month with dynamic partition overwrite so re-runs
-  * replace exactly one partition (the delete-day-then-insert analog, K2).
+  * Scale: an entry is a keyed count plus a finishing of Column
+  * expressions. On its own ([[Mart.apply]]) it is one hash-aggregate over
+  * the facts. A day's rebuild ([[rebuild]]) counts every chosen entry in
+  * ONE grouping-sets aggregate over one scan; its result is bounded by the
+  * target periods (one day's cube tuples plus a group per municipality,
+  * UF, biome, UC and TI), so it is collected and each mart is finished on
+  * the driver. Each mart is written partitioned by day/month with dynamic
+  * partition overwrite, so re-runs replace exactly its partitions (the
+  * delete-day-then-insert analog, K2).
   */
 object Marts {
 
@@ -41,88 +52,92 @@ object Marts {
   def period(dayFrom: Column, grain: String): Column =
     if (grain == "day") dayFrom else date_trunc("month", dayFrom).cast("date")
 
-  /** A mart's rows from (period column, facts, UF areas). */
-  type Aggregate = (Column, DataFrame, () => DataFrame) => DataFrame
-
-  /** One mart table entry. `grain` (`day` or `month`) is the period it
-    * counts per and its partition column; `dayFrom` the column a fact's day
-    * is taken from. Entries sharing an `aggregate` are one family, written
-    * by one task. With `over`, the entry is a view over that entry's whole
-    * stored table: rebuilt whole, stored unpartitioned, on its task after it.
+  /** One mart table entry: a keyed count, then `finish`. The count groups
+    * the facts by their period at `grain` (`day` or `month`, also the
+    * partition column), the day taken from `dayFrom`, and by `keys`
+    * (output name -> fact column); it carries the `max` of each `maxOf`
+    * column and the row count as `n`. A `keyed` count drops facts whose
+    * first key is null. With `areaJoin` the count is inner-joined on `uf`
+    * to the UF areas, so UFs without an area drop, as in J6. With `over`,
+    * the entry is a view over that entry's whole stored table: `finish` of
+    * it, rebuilt whole, stored unpartitioned, on its task after it.
     */
   final case class Mart(name: String, grain: String, dayFrom: Column,
-                        aggregate: Aggregate, over: Option[Mart] = None) {
+                        keys: Seq[(String, String)], maxOf: Seq[String] = Nil,
+                        n: String = "n_focos", keyed: Boolean = true,
+                        areaJoin: Boolean = false,
+                        finish: DataFrame => DataFrame = identity,
+                        over: Option[Mart] = None) {
     require(grain == "day" || grain == "month", s"$name: grain must be day or month")
 
-    /** The mart's rows from `facts`; only the UF marts read `ufArea`. */
+    /** The mart's rows from `facts` (a view's: from its source's rows);
+      * only the UF marts read `ufArea`. */
     def apply(facts: DataFrame,
               ufArea: => DataFrame = throw new IllegalArgumentException(
                 s"$name needs the UF area rollup")): DataFrame =
-      aggregate(period(dayFrom, grain).as(grain), facts, () => ufArea)
+      if (over.isDefined) finish(facts)
+      else {
+        val kept = if (keyed) facts.filter(col(keys.head._2).isNotNull) else facts
+        val aggs = maxOf.map(c => max(c).as(c)) :+ count(lit(1)).as(n)
+        val counts = kept
+          .groupBy(period(dayFrom, grain).as(grain) +: keys.map { case (o, s) => col(s).as(o) }: _*)
+          .agg(aggs.head, aggs.tail: _*)
+        finish(if (areaJoin) counts.join(broadcast(ufArea), "uf") else counts)
+      }
   }
 
   private def per100km2(n: Column, area: Column): Column =
     round((lit(100) * n.cast(DecimalType(38, 10))) /
       when(area === 0, null).otherwise(area).cast(DecimalType(38, 10)), 4)
 
-  /** The keyed-count builder: facts whose first key is non-null, grouped by
-    * (period, keys), the `max` of each `maxOf` label or area column, and the
-    * row count as `n`. */
-  private def keyedCount(period: Column, facts: DataFrame, keys: Seq[String],
-                         maxOf: Seq[String], n: String): DataFrame = {
-    val aggs = maxOf.map(c => max(c).as(c)) :+ count(lit(1)).as(n)
-    facts.filter(col(keys.head).isNotNull)
-      .groupBy(period +: keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
+  private def same(cols: String*): Seq[(String, String)] = cols.map(c => c -> c)
 
   /** A1/A2 — municipality marts (10/11_focos_*_municipio.sql:28-51), with
     * the reference's max(area) density denominator. */
-  private val municipio: Aggregate = (period, facts, _) =>
-    keyedCount(period, facts, Seq("mun_cd_mun", "mun_nm_mun", "mun_uf"),
-      Seq("mun_area_km2"), "n_focos")
-      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("mun_area_km2")))
+  private def municipio(name: String, grain: String) =
+    Mart(name, grain, dayKey, same("mun_cd_mun", "mun_nm_mun", "mun_uf"),
+      Seq("mun_area_km2"), finish = _.withColumn("focos_por_100km2",
+        per100km2(col("n_focos"), col("mun_area_km2"))))
 
-  /** A3/J6 — UF marts with the area join (20/21_focos_*_uf.sql:30-43):
-    * inner, so UFs without an area drop, as in J6. */
-  private val uf: Aggregate = (period, facts, ufArea) =>
-    keyedCount(period, facts, Seq("mun_uf"), Nil, "n_focos")
-      .withColumnRenamed("mun_uf", "uf")
-      .join(broadcast(ufArea()), "uf")
-      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("uf_area_km2")))
+  /** A3/J6 — UF marts with the area join (20/21_focos_*_uf.sql:30-43). */
+  private def uf(name: String, grain: String) =
+    Mart(name, grain, dayKey, Seq("uf" -> "mun_uf"), areaJoin = true,
+      finish = _.withColumn("focos_por_100km2",
+        per100km2(col("n_focos"), col("uf_area_km2"))))
 
   /** A4/A5/A6 — biome, UC and TI marts (40..61_*.sql): label = max(),
     * count as `int`. */
-  private def labelled(key: String, label: String): Aggregate = (period, facts, _) =>
-    keyedCount(period, facts, Seq(key), Seq(label), "focos")
-      .withColumn("focos", col("focos").cast("int"))
-  private val bioma = labelled("cd_bioma", "bioma")
-  private val uc = labelled("cd_cnuc", "uc_nome")
-  private val ti = labelled("terrai_cod", "ti_nome")
+  private def labelled(name: String, grain: String, key: String, label: String) =
+    Mart(name, grain, fileDate, same(key), Seq(label), "focos",
+      finish = _.withColumn("focos", col("focos").cast("int")))
+
+  /** The fact cube's 11 dimension columns, `cd_uf` taken from `cdUf`. */
+  private def cubeKeys(cdUf: String): Seq[(String, String)] =
+    Seq("uf" -> "mun_uf", "cd_uf" -> cdUf, "cd_mun" -> "mun_cd_mun") ++
+      same("mun_nm_mun", "bioma", "cd_bioma", "uc_nome", "cd_cnuc", "ti_nome", "terrai_cod")
 
   /** Read by `Pipeline.checkDay` and the trend view. */
-  val diarioMunicipio: Mart = Mart("focos_diario_municipio", "day", dayKey, municipio)
-  val diarioUf: Mart = Mart("focos_diario_uf", "day", dayKey, uf)
+  val diarioMunicipio: Mart = municipio("focos_diario_municipio", "day")
+  val diarioUf: Mart = uf("focos_diario_uf", "day")
 
   /** Every stored mart, in the reference's file order. */
   val table: Seq[Mart] = Seq(
     diarioMunicipio,
-    Mart("focos_mensal_municipio", "month", dayKey, municipio),
+    municipio("focos_mensal_municipio", "month"),
     diarioUf,
-    Mart("focos_mensal_uf", "month", dayKey, uf),
-    Mart("focos_diario_bioma", "day", fileDate, bioma),
-    Mart("focos_mensal_bioma", "month", fileDate, bioma),
-    Mart("focos_diario_uc", "day", fileDate, uc),
-    Mart("focos_mensal_uc", "month", fileDate, uc),
-    Mart("focos_diario_ti", "day", fileDate, ti),
-    Mart("focos_mensal_ti", "month", fileDate, ti),
-    Mart("focos_diario_uf_trend", "day", dayKey,
-      (_, dailyUf, _) => focosDiarioUfTrend(dailyUf), over = Some(diarioUf)),
+    uf("focos_mensal_uf", "month"),
+    labelled("focos_diario_bioma", "day", "cd_bioma", "bioma"),
+    labelled("focos_mensal_bioma", "month", "cd_bioma", "bioma"),
+    labelled("focos_diario_uc", "day", "cd_cnuc", "uc_nome"),
+    labelled("focos_mensal_uc", "month", "cd_cnuc", "uc_nome"),
+    labelled("focos_diario_ti", "day", "terrai_cod", "ti_nome"),
+    labelled("focos_mensal_ti", "month", "terrai_cod", "ti_nome"),
+    Mart("focos_diario_uf_trend", "day", dayKey, Nil, finish = focosDiarioUfTrend,
+      over = Some(diarioUf)),
     // the fact cube for the serving layer (065_mv_focos_day_dim.sql) —
     // cd_uf is the UF code column the reference denormalizes; our dims
     // carry uf text
-    Mart("mv_focos_day_dim", "day", dayKey,
-      (period, facts, _) => cube(period, facts.withColumn("cd_uf", col("mun_uf")))))
+    Mart("mv_focos_day_dim", "day", dayKey, cubeKeys("mun_uf"), keyed = false))
 
   /** The table entry named `name`. */
   def apply(name: String): Mart =
@@ -132,6 +147,87 @@ object Marts {
   /** A3/J6 — the daily UF mart over `enriched`. */
   def focosDiarioUf(enriched: DataFrame, ufArea: DataFrame): DataFrame =
     diarioUf(enriched, ufArea)
+
+  /** The rows of every entry of `marts` (none a view) for the `targets`
+    * periods of its grain, from ONE grouping-sets aggregate over `facts`.
+    * Each entry is one grouping set: its period column, its keys and its
+    * `maxOf` columns; the aggregate is the count alone, and `grouping_id()`
+    * tags the set. A fact's period column is null unless its period is a
+    * target whose `scope` holds for the fact, so the groups outside the
+    * targets are filtered out before the collect. The rest is split per
+    * entry on the driver, where the null-first-key groups drop, each
+    * group's `maxOf` values fold with Spark's `max` and its counts sum, the
+    * UF areas are a lookup in the collected `ufArea` (inner, like
+    * [[Mart.apply]]'s join) and `finish` runs over a local relation, which
+    * Spark folds at plan time: no job, no generated class. */
+  def rebuild(facts: DataFrame, marts: Seq[Mart], targets: Map[String, Seq[Date]],
+              scope: (String, Date) => Column, ufArea: => DataFrame): Seq[(Mart, DataFrame)] = {
+    require(marts.forall(_.over.isEmpty), "a view is rebuilt over its stored source")
+    val periods = marts.map(m => (m.dayFrom, m.grain)).distinct.zipWithIndex.map {
+      case (k @ (dayFrom, grain), i) =>
+        val p = period(dayFrom, grain)
+        k -> (s"__p$i", coalesce(targets(grain)
+          .map(t => when(scope(grain, t) && p === lit(t), lit(t))): _*))
+    }.toMap
+    val periodCols = periods.values.toSeq.sortBy(_._1)
+    val factCols = marts.flatMap(m => m.keys.map(_._2) ++ m.maxOf).distinct
+    val grouping = periodCols.map(_._1) ++ factCols
+    def set(m: Mart): Set[String] =
+      (m.keys.map(_._2) ++ m.maxOf).toSet + periods((m.dayFrom, m.grain))._1
+    // grouping_id(): one bit per grouping column, first column highest, set
+    // when the column is NOT in the grouping set
+    def gid(s: Set[String]): Long = grouping.zipWithIndex.collect {
+      case (c, i) if !s(c) => 1L << (grouping.size - 1 - i)
+    }.sum
+    val result = facts
+      .select(periodCols.map { case (name, p) => p.as(name) } ++ factCols.map(col): _*)
+      .groupingSets(marts.map(set).distinct.map(s => grouping.filter(s).map(col)),
+        grouping.map(col): _*)
+      .agg(count(lit(1)).as("__n"), grouping_id().as("__gid"))
+      .filter(coalesce(periodCols.map(p => col(p._1)): _*).isNotNull)
+    val rows = result.collect()
+    val (at, field) = (result.columns.zipWithIndex.toMap, result.schema.fields)
+    lazy val areas = ufArea.collect()
+    marts.map { m =>
+      val group = (periods((m.dayFrom, m.grain))._1 -> m.grain) +: m.keys.map(_.swap)
+      val (gi, mi, n) = (group.map(c => at(c._1)), m.maxOf.map(at), at("__n"))
+      val maxes = mi.map(i => sparkMax(field(i).dataType))
+      val (tag, first) = (gid(set(m)), at(m.keys.head._2))
+      val counted = rows.toSeq.filter(r =>
+        r.getLong(at("__gid")) == tag && !(m.keyed && r.isNullAt(first)))
+        .groupBy(r => gi.map(r.get)).toSeq.map { case (key, rs) =>
+          Row.fromSeq(key ++ mi.indices.map(j => rs.map(_.get(mi(j))).reduce(maxes(j))) :+
+            rs.map(_.getLong(n)).sum)
+        }
+      val schema = StructType(group.map { case (c, out) => field(at(c)).copy(name = out) } ++
+        mi.map(field) :+ field(n).copy(name = m.n))
+      val (local, localSchema) =
+        if (m.areaJoin) joinUf(counted, schema, areas, ufArea.schema) else (counted, schema)
+      m -> m.finish(facts.sparkSession.createDataFrame(local.asJava, localSchema))
+    }
+  }
+
+  /** Spark's `max` of two external values of type `dt`: a null loses. */
+  private def sparkMax(dt: DataType): (Any, Any) => Any = {
+    val (order, internal) = (TypeUtils.getInterpretedOrdering(dt),
+      CatalystTypeConverters.createToCatalystConverter(dt))
+    (a, b) => if (b == null || (a != null && order.gteq(internal(a), internal(b)))) a else b
+  }
+
+  /** `rows` inner-joined on `uf` to the `area` rows, in the column order of
+    * a USING join: `uf`, then the other count columns, then the other area
+    * columns. */
+  private def joinUf(rows: Seq[Row], schema: StructType, area: Array[Row],
+                     areaSchema: StructType): (Seq[Row], StructType) = {
+    val (k, ak) = (schema.fieldIndex("uf"), areaSchema.fieldIndex("uf"))
+    val byUf = area.filterNot(_.isNullAt(ak)).groupBy(_.get(ak))
+    val (rest, areaRest) = (schema.indices.filter(_ != k), areaSchema.indices.filter(_ != ak))
+    val joined = for {
+      r <- rows if !r.isNullAt(k)
+      a <- byUf.getOrElse(r.get(k), Array.empty[Row])
+    } yield Row.fromSeq(r.get(k) +: (rest.map(r.get) ++ areaRest.map(a.get)))
+    (joined, StructType(schema(k) +: (rest.map(schema(_)) ++ areaRest.map(areaSchema(_)))))
+  }
 
   /** A7/W3 — period stats + argmax peak day with the DISTINCT ON tiebreak
     * `order by uf, n_focos desc, day` (40_focos_periodo_uf.sql:22-73).
@@ -180,14 +276,8 @@ object Marts {
     * (sqlm/marts/canonical/065_mv_focos_day_dim.sql:5-20): group by the 11
     * dimension columns, count. Every API aggregate reads this table.
     */
-  def factCube(enrichedFull: DataFrame): DataFrame = cube(dayKey.as("day"), enrichedFull)
-
-  private def cube(period: Column, facts: DataFrame): DataFrame =
-    facts.groupBy(period,
-        col("mun_uf").as("uf"), col("cd_uf"), col("mun_cd_mun").as("cd_mun"),
-        col("mun_nm_mun"), col("bioma"), col("cd_bioma"),
-        col("uc_nome"), col("cd_cnuc"), col("ti_nome"), col("terrai_cod"))
-      .agg(count(lit(1)).as("n_focos"))
+  def factCube(enrichedFull: DataFrame): DataFrame =
+    apply("mv_focos_day_dim").copy(keys = cubeKeys("cd_uf"))(enrichedFull)
 
   /** J7 — geo view: mart rows inner-joined to their web geometry
     * (sql/marts/90_geo_focos_diario_municipio.sql:13-15). The geometry

@@ -200,29 +200,24 @@ final class Pipeline(spark: SparkSession, root: String,
     }
   }
 
-  /** The facts of the day or month (`grain`) containing `d`, a fact's day
-    * taken from `dayFrom`: a partition-pruned read of enriched/, then the
-    * derived period filter. The `file_date` BETWEEN bound makes a rebuild
-    * scan O(retention) partitions instead of full history (the reference
-    * scans the FULL table with only the day-key predicate,
-    * 10_focos_diario_municipio.sql:50 — the deliberate scale deviation).
-    * Padded BOTH sides: the view day can lag file_date AND lead it (late
-    * files carrying earlier view days), so a one-sided window silently
-    * dropped late-arriving rows from every rebuild. */
-  private def slice(enrichedAll: DataFrame, dayFrom: Column, grain: String,
-                    d: Date): DataFrame = {
-    val ld = d.toLocalDate
-    val (start, end) = if (grain == "day") (d, d)
-      else (Date.valueOf(ld.withDayOfMonth(1)), Date.valueOf(ld.withDayOfMonth(ld.lengthOfMonth)))
-    enrichedAll
-      .filter(col("file_date").between(
-        date_sub(lit(start), retentionDays), date_add(lit(end), retentionDays)))
-      .filter(Marts.period(dayFrom, grain) === lit(start))
+  /** The `file_date` window a rebuild of the `grain` period starting at
+    * `start` reads: a partition predicate, so a rebuild scans O(retention)
+    * partitions instead of full history (the reference scans the FULL table
+    * with only the day-key predicate, 10_focos_diario_municipio.sql:50 —
+    * the deliberate scale deviation). Padded BOTH sides: the view day can
+    * lag file_date AND lead it (late files carrying earlier view days), so
+    * a one-sided window silently dropped late-arriving rows from every
+    * rebuild. */
+  private def window(grain: String, start: Date): Column = {
+    val ld = start.toLocalDate
+    val end = if (grain == "day") ld else ld.withDayOfMonth(ld.lengthOfMonth)
+    col("file_date").between(lit(Date.valueOf(ld.minusDays(retentionDays))),
+      lit(Date.valueOf(end.plusDays(retentionDays))))
   }
 
   /** The facts the daily municipality and UF marts of day `d` read. */
   def martInput(enrichedAll: DataFrame, d: Date): DataFrame =
-    slice(enrichedAll, Marts.dayKey, "day", d)
+    enrichedAll.filter(window("day", d)).filter(Marts.dayKey === lit(d))
 
   private def requireKnown(marts: Set[String]): Unit = {
     val unknown = marts -- allMarts
@@ -355,57 +350,53 @@ final class Pipeline(spark: SparkSession, root: String,
     * pointed at). Default rebuilds everything; an unknown name fails. */
   def writeMarts(d: Date, only: Set[String] = allMarts.toSet): Unit = {
     requireKnown(only)
-    // Mart aggregates are day/month slices — a few thousand rows whatever
-    // the corpus size. AQE's partition coalescing keeps their exchanges
-    // task-efficient at any session parallelism (measured: pinning a
-    // smaller shuffle-partition count here was indistinguishable from
-    // letting AQE coalesce, so no knob).
-    val enrichedAll = readTable("enriched")
     val chosen = Marts.table.filter(m => only(m.name))
-    // each slice feeds up to 3 mart aggregates — cache for the duration of
-    // the rebuild so the enriched partitions are scanned once per slice, not
-    // once per mart. Slices are partition-bounded (one day / one month of
-    // facts), so the cache is O(batch), never O(history); only the slices
-    // the chosen marts read are cached, and all are released before
-    // returning.
-    val slices = chosen.filter(_.over.isEmpty).map(m => (m.dayFrom, m.grain)).distinct
-      .map { case k @ (dayFrom, grain) => k -> slice(enrichedAll, dayFrom, grain, d).cache() }
-      .toMap
+    val counted = chosen.filter(_.over.isEmpty)
+    // The target periods: the run day and its month, for the grains the
+    // chosen marts count per. One scan of enriched/ covers their windows
+    // (the month of d ± retention), and one grouping-sets aggregate counts
+    // every chosen mart in it; its result is a few thousand rows whatever
+    // the corpus size, so it is collected and each mart comes back as
+    // driver-local rows: nothing is cached, and a write runs no aggregate.
+    val month = Date.valueOf(d.toLocalDate.withDayOfMonth(1))
+    val targets = Map("day" -> Seq(d), "month" -> Seq(month))
+      .filter { case (grain, _) => counted.exists(_.grain == grain) }
+    val built = if (counted.isEmpty) Map.empty[String, DataFrame] else {
+      val scan = readTable("enriched").filter(targets.toSeq
+        .flatMap { case (grain, ts) => ts.map(window(grain, _)) }.reduce(_ || _))
+      Marts.rebuild(scan, counted, targets, window, ufAreaDim)
+        .map { case (m, rows) => m.name -> rows }.toMap
+    }
     def write(m: Marts.Mart): Unit = {
       val out = s"marts/${m.name}"
       m.over match {
         case Some(src) =>
-          val rows = m(readTable(s"marts/${src.name}"), ufAreaDim)
+          val rows = m(readTable(s"marts/${src.name}"))
           rows.write.mode("overwrite").parquet(path(out))
           noteWrite(out, rows, Seq.empty)
         case None =>
-          val rows = m(slices((m.dayFrom, m.grain)), ufAreaDim)
-          Marts.writePartitioned(rows, path(out), m.grain)
+          // one file per written partition: the rows are local and few
+          val rows = built(m.name)
+          Marts.writePartitioned(rows.coalesce(1), path(out), m.grain)
           noteWrite(out, rows, Seq(m.grain))
       }
     }
-    // The marts are INDEPENDENT writes to distinct paths, and each is a
-    // small aggregate job followed by driver-side commit/listing latency.
-    // Submitting them from a bounded pool overlaps one mart's driver
-    // latency with another's executor work instead of serializing
-    // ~12 × (plan + job + commit) — the §2.6 back-fill pattern; Spark's
-    // scheduler runs concurrent jobs FIFO, which is exactly the desired
-    // fill-the-tail behavior. One task per family (its daily then its
-    // monthly mart; a view runs on its source's task, after it). 3 in
-    // flight is enough to hide the latency without the tiny aggregates
-    // fighting for cores. Job groups/descriptions are thread-local, so
-    // per-thread submission also keeps the UI attribution correct.
-    def family(m: Marts.Mart) = m.over.getOrElse(m).aggregate
-    val tasks = chosen.map(family).distinct.map(f => chosen.filter(family(_) == f))
-    try {
-      // Pipeline.inParallel awaits ALL before surfacing the first failure,
-      // so no write is still in flight when the caller sees the exception
-      // or the unpersist below runs
-      Pipeline.inParallel(tasks.map(ms => () => ms.foreach(write)), threads = 3)
-      ()
-    } finally {
-      slices.values.foreach(_.unpersist(false))
-    }
+    // The marts are INDEPENDENT writes to distinct paths, each a small job
+    // followed by driver-side commit/listing latency. Submitting them from
+    // a bounded pool overlaps one mart's driver latency with another's
+    // write instead of serializing ~12 × (plan + job + commit) — the §2.6
+    // back-fill pattern. One task per counted mart; a view runs on its
+    // source's task, after it. 3 in flight: on 4 cores, traced perfbench
+    // daily_refetch read 1.83/2.01 s of marts per day at 3 threads against
+    // 2.05/1.71 s at 4 and 1.78/1.87 s at 6, so more threads buy nothing.
+    // Job groups and descriptions are thread-local, so per-thread
+    // submission also keeps the UI attribution correct. inParallel awaits
+    // ALL before surfacing the first failure, so no write is still in
+    // flight when the caller sees the exception.
+    val tasks = chosen.filterNot(m => m.over.exists(chosen.contains))
+      .map(m => m +: chosen.filter(_.over.contains(m)))
+    Pipeline.inParallel(tasks.map(ms => () => ms.foreach(write)), threads = 3)
+    ()
   }
 
   /** Checked-flag read path: re-enrich only rows some dimension has not

@@ -459,14 +459,83 @@ class PipelineSpec extends AnyFunSuite {
     for ((name, want) <- golden) assert(stored(name) == want, name)
   }
 
+  /** The golden days plus two facts written straight into enriched/: one in
+    * a UF the area rollup does not carry and with a second label for the
+    * biome key, one with a null municipality. */
+  test("writeMarts stores, for every counted mart and both rebuilt periods, " +
+    "the rows its own table entry computes over all of enriched/") {
+    import graft.marts.Marts
+    val dir = Files.createTempDirectory("graft_mart_equiv")
+    val root = dir.resolve("wh").toString
+    val p = new Pipeline(spark, root, municipios, biomas, Some(ucs), Some(tis))
+    val (jan31, feb1) = (LocalDate.parse("2024-01-31"), LocalDate.parse("2024-02-01"))
+    p.runDay(writeGoldenCsv(dir, jan31), jan31)
+    p.runDay(writeGoldenCsv(dir, feb1), feb1)
+    val alphaUc = spark.read.parquet(s"$root/enriched")
+      .filter(col("file_date") === lit(java.sql.Date.valueOf(jan31)) &&
+        col("mun_uf") === "RO" && col("cd_cnuc").isNotNull).limit(1)
+    val extra = alphaUc
+      .withColumn("event_hash", lit("zeta")).withColumn("mun_cd_mun", lit("9900001"))
+      .withColumn("mun_nm_mun", lit("Zeta")).withColumn("mun_uf", lit("ZZ"))
+      .withColumn("bioma", lit("Amazônia Legal"))
+      .unionByName(alphaUc.withColumn("event_hash", lit("no_mun"))
+        .withColumn("mun_cd_mun", lit(null).cast("string"))
+        .withColumn("mun_nm_mun", lit(null).cast("string"))
+        .withColumn("mun_uf", lit(null).cast("string")))
+    val rows = extra.collect()
+    assert(rows.length == 2)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), extra.schema)
+      .write.mode("append").partitionBy("file_date").parquet(s"$root/enriched")
+
+    val enriched = spark.read.parquet(s"$root/enriched")
+    val area = Marts.ufAreaRollup(municipios)
+    def shown(df: DataFrame): (String, Seq[String]) =
+      (df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(","),
+        df.collect().map(_.toSeq.mkString("|")).toSeq.sorted)
+    for (day <- Seq(jan31, feb1)) {
+      p.writeMarts(java.sql.Date.valueOf(day))
+      for (m <- Marts.table if m.over.isEmpty) {
+        val start = if (m.grain == "day") day else day.withDayOfMonth(1)
+        val inPeriod = col(m.grain) === lit(java.sql.Date.valueOf(start))
+        val stored = spark.read.parquet(s"$root/marts/${m.name}").filter(inPeriod)
+        val want = Marts(m.name)(enriched, area).filter(inPeriod)
+        // stored order: the data columns, then the partition column
+        val storedOrder = want.columns.filter(_ != m.grain) :+ m.grain
+        assert(shown(stored) == shown(want.select(storedOrder.map(col).toIndexedSeq: _*)),
+          s"${m.name} $start")
+      }
+    }
+    val munJan = spark.read.parquet(s"$root/marts/focos_mensal_municipio")
+      .filter(col("month") === lit(java.sql.Date.valueOf("2024-01-01")))
+    assert(munJan.filter(col("mun_uf") === "ZZ").count() == 1)
+    assert(munJan.filter(col("mun_cd_mun").isNull).count() == 0)
+    val ufJan = spark.read.parquet(s"$root/marts/focos_mensal_uf")
+    assert(ufJan.filter(col("uf") === "ZZ" || col("uf").isNull).count() == 0)
+    assert(spark.read.parquet(s"$root/marts/focos_diario_bioma")
+      .filter(col("day") === lit(java.sql.Date.valueOf(jan31)))
+      .head().getAs[String]("bioma") == "Amazônia Legal")
+    assert(spark.read.parquet(s"$root/marts/focos_mensal_uc")
+      .filter(col("month") === lit(java.sql.Date.valueOf("2024-01-01")))
+      .head().getAs[Int]("focos") == 3)
+  }
+
+  test("writeMarts runs at most 16 Spark jobs for a day's twelve marts and " +
+    "persists nothing") {
+    val (p, _, _) = fixture
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val (_, m) = RunMetrics.setup(spark).measure(p.writeMarts(java.sql.Date.valueOf(d1)))
+    assert(m("spark.jobs") <= 16, s"writeMarts ran ${m("spark.jobs")} jobs")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+  }
+
   test("writeMarts subset: one named mart is the only table written, and no " +
     "cached slice outlives the call") {
     val dir = Files.createTempDirectory("graft_mart_subset")
     val root = dir.resolve("wh").toString
     val p = new Pipeline(spark, root, municipios, biomas, Some(ucs), Some(tis))
     p.runDay(writeDailyCsv(dir, d1), d1) // default: every mart
-    // a slice the call caches is materialized by its aggregate, so a leaked
-    // one stays among the persisted RDDs
+    // writeMarts caches nothing: any frame it persisted and did not release
+    // would stay among the persisted RDDs
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val p2 = new Pipeline(spark, dir.resolve("wh2").toString, municipios, biomas,
       Some(ucs), Some(tis))
