@@ -7063,12 +7063,13 @@ object Queries {
         .groupBy(col("ts").cast("date").as("day")).agg(count(lit(1)).as("n"))),
 
     // §2.10 + K1 + K2 under the correctness gate: the per-day batch pipeline
-    // (ingest → idempotent load → PIP enrich → 13 marts) runs TWICE over the
-    // same INPE-shaped day into a scratch warehouse; the second run must
-    // insert 0 rows and leave every mart unchanged. The oracle needs no
-    // geometry: each valid event lands in exactly one municipality/UF/biome
-    // box by construction, so every conservation aggregate equals the valid
-    // row count n — idempotency itself is the oracle.
+    // (ingest → idempotent load → PIP enrich → the 3 daily marts it checks)
+    // runs TWICE over the same INPE-shaped day into a scratch warehouse; the
+    // second run must insert 0 rows and leave every mart unchanged. The
+    // oracle needs no geometry: each valid event lands in exactly one
+    // municipality/UF/biome box by construction, so every conservation
+    // aggregate equals the valid row count n — idempotency itself is the
+    // oracle.
     QueryDef("pipeline_idempotent", Some(
       "WITH v AS (SELECT count(*) AS n FROM events WHERE event_id % 10 = 0 " +
         "AND event_id % 97 <> 0 AND event_id % 89 <> 0) " +

@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.{DataType, DecimalType, StructType}
   *
   * Each family takes its day from one column — two different day keys,
   * deliberately copied, not "fixed" (§7.4 risk 5):
-  *  - municipality/UF marts, the trend view over them and the fact cube:
+  *  - municipality/UF marts (so also the trend view over the daily UF
+  *    mart) and the fact cube:
   *    [[dayKey]] = `coalesce(view_ts::date, file_date)`
   *    (sql/marts/10_focos_diario_municipio.sql:38)
   *  - biome/UC/TI marts: raw [[fileDate]]
@@ -58,32 +59,26 @@ object Marts {
     * (output name -> fact column); it carries the `max` of each `maxOf`
     * column and the row count as `n`. A `keyed` count drops facts whose
     * first key is null. With `areaJoin` the count is inner-joined on `uf`
-    * to the UF areas, so UFs without an area drop, as in J6. With `over`,
-    * the entry is a view over that entry's whole stored table: `finish` of
-    * it, rebuilt whole, stored unpartitioned, on its task after it.
+    * to the UF areas, so UFs without an area drop, as in J6.
     */
   final case class Mart(name: String, grain: String, dayFrom: Column,
                         keys: Seq[(String, String)], maxOf: Seq[String] = Nil,
                         n: String = "n_focos", keyed: Boolean = true,
                         areaJoin: Boolean = false,
-                        finish: DataFrame => DataFrame = identity,
-                        over: Option[Mart] = None) {
+                        finish: DataFrame => DataFrame = identity) {
     require(grain == "day" || grain == "month", s"$name: grain must be day or month")
 
-    /** The mart's rows from `facts` (a view's: from its source's rows);
-      * only the UF marts read `ufArea`. */
+    /** The mart's rows from `facts`; only the UF marts read `ufArea`. */
     def apply(facts: DataFrame,
               ufArea: => DataFrame = throw new IllegalArgumentException(
-                s"$name needs the UF area rollup")): DataFrame =
-      if (over.isDefined) finish(facts)
-      else {
-        val kept = if (keyed) facts.filter(col(keys.head._2).isNotNull) else facts
-        val aggs = maxOf.map(c => max(c).as(c)) :+ count(lit(1)).as(n)
-        val counts = kept
-          .groupBy(period(dayFrom, grain).as(grain) +: keys.map { case (o, s) => col(s).as(o) }: _*)
-          .agg(aggs.head, aggs.tail: _*)
-        finish(if (areaJoin) counts.join(broadcast(ufArea), "uf") else counts)
-      }
+                s"$name needs the UF area rollup")): DataFrame = {
+      val kept = if (keyed) facts.filter(col(keys.head._2).isNotNull) else facts
+      val aggs = maxOf.map(c => max(c).as(c)) :+ count(lit(1)).as(n)
+      val counts = kept
+        .groupBy(period(dayFrom, grain).as(grain) +: keys.map { case (o, s) => col(s).as(o) }: _*)
+        .agg(aggs.head, aggs.tail: _*)
+      finish(if (areaJoin) counts.join(broadcast(ufArea), "uf") else counts)
+    }
   }
 
   private def per100km2(n: Column, area: Column): Column =
@@ -116,7 +111,8 @@ object Marts {
     Seq("uf" -> "mun_uf", "cd_uf" -> cdUf, "cd_mun" -> "mun_cd_mun") ++
       same("mun_nm_mun", "bioma", "cd_bioma", "uc_nome", "cd_cnuc", "ti_nome", "terrai_cod")
 
-  /** Read by `Pipeline.checkDay` and the trend view. */
+  /** Read by `Pipeline.checkDay`; the daily UF mart is also the stored
+    * table the trend view ([[focosDiarioUfTrend]]) is computed over. */
   val diarioMunicipio: Mart = municipio("focos_diario_municipio", "day")
   val diarioUf: Mart = uf("focos_diario_uf", "day")
 
@@ -132,8 +128,6 @@ object Marts {
     labelled("focos_mensal_uc", "month", "cd_cnuc", "uc_nome"),
     labelled("focos_diario_ti", "day", "terrai_cod", "ti_nome"),
     labelled("focos_mensal_ti", "month", "terrai_cod", "ti_nome"),
-    Mart("focos_diario_uf_trend", "day", dayKey, Nil, finish = focosDiarioUfTrend,
-      over = Some(diarioUf)),
     // the fact cube for the serving layer (065_mv_focos_day_dim.sql) —
     // cd_uf is the UF code column the reference denormalizes; our dims
     // carry uf text
@@ -148,8 +142,8 @@ object Marts {
   def focosDiarioUf(enriched: DataFrame, ufArea: DataFrame): DataFrame =
     diarioUf(enriched, ufArea)
 
-  /** The rows of every entry of `marts` (none a view) for the `targets`
-    * periods of its grain, from ONE grouping-sets aggregate over `facts`.
+  /** The rows of every entry of `marts` for the `targets` periods of its
+    * grain, from ONE grouping-sets aggregate over `facts`.
     * Each entry is one grouping set: its period column, its keys and its
     * `maxOf` columns; the aggregate is the count alone, and `grouping_id()`
     * tags the set. A fact's period column is null unless its period is a
@@ -162,7 +156,6 @@ object Marts {
     * Spark folds at plan time: no job, no generated class. */
   def rebuild(facts: DataFrame, marts: Seq[Mart], targets: Map[String, Seq[Date]],
               scope: (String, Date) => Column, ufArea: => DataFrame): Seq[(Mart, DataFrame)] = {
-    require(marts.forall(_.over.isEmpty), "a view is rebuilt over its stored source")
     val periods = marts.map(m => (m.dayFrom, m.grain)).distinct.zipWithIndex.map {
       case (k @ (dayFrom, grain), i) =>
         val p = period(dayFrom, grain)
@@ -254,9 +247,11 @@ object Marts {
       .withColumn("focos_por_100km2", per100km2(col("n_focos_total"), col("uf_area_km2")))
   }
 
-  /** W1/W2 — trend view: 7- and 30-day moving averages, ROW-based frames
-    * (gaps NOT respected — copied bug-for-bug from
-    * 30_focos_diario_uf_trend.sql:21-37). */
+  /** W1/W2 — the trend view: 7- and 30-day moving averages over the daily
+    * UF mart, ROW-based frames (gaps NOT respected — copied bug-for-bug
+    * from the reference's file 30, sql/marts/30_*_trend.sql:21-37). Like
+    * the reference's view it is derived, not stored: computed on read over
+    * the stored `marts/focos_diario_uf`, so it is never behind its source. */
   def focosDiarioUfTrend(dailyUf: DataFrame): DataFrame = {
     val w = Window.partitionBy("uf").orderBy("day")
     // exact-rational mean over the frame (same form as focosPeriodoUf):

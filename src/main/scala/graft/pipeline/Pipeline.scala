@@ -68,9 +68,11 @@ object Pipeline {
   * The full reference enrichment chain runs per day: municipality PIP+KNN
   * (sql/enrich/20_enrich_municipio.sql) then first-match biome, UC and TI
   * (21_enrich_biomas_ucs_tis.sql:21-119); marts cover municipality/UF
-  * daily+monthly, trend, biome/UC/TI daily+monthly
-  * (sql/marts/10..61) and the 11-column fact cube
-  * (sqlm/marts/canonical/065_mv_focos_day_dim.sql).
+  * daily+monthly, biome/UC/TI daily+monthly (sql/marts/10..61) and the
+  * 11-column fact cube (sqlm/marts/canonical/065_mv_focos_day_dim.sql).
+  * File 30, the UF trend, is a view in the reference and is not stored
+  * here either: `Marts.focosDiarioUfTrend` computes it on read over
+  * `marts/focos_diario_uf`.
   *
   * Scale: every mart read is bounded by a `file_date` PARTITION predicate
   * before the derived day-key filter — `coalesce(to_date(view_ts),
@@ -176,29 +178,21 @@ final class Pipeline(spark: SparkSession, root: String,
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], like.schema)
 
   /** biome + UC + TI first-match enrichment, lowest-id tiebreak
-    * (21_enrich_biomas_ucs_tis.sql:33-43,62-73,92-103). Missing dims yield
-    * null columns with the checked flag still set (the reference marks rows
-    * checked even when no polygon matches, :47-58). */
-  private def enrichDims(withMun: DataFrame): DataFrame = {
-    val withBioma = Enrich.enrichFirstMatch(withMun, biomas,
-      Map("cd_bioma" -> "cd_bioma", "bioma_nome" -> "bioma"), "bioma_checked")
-    val withUc = ucs match {
-      case Some(uc) => Enrich.enrichFirstMatch(withBioma, uc,
-        Map("cd_cnuc" -> "cd_cnuc", "nome_uc" -> "uc_nome"), "uc_checked")
-      case None => withBioma
-        .withColumn("cd_cnuc", lit(null).cast("string"))
-        .withColumn("uc_nome", lit(null).cast("string"))
-        .withColumn("uc_checked", lit(true))
-    }
-    tis match {
-      case Some(ti) => Enrich.enrichFirstMatch(withUc, ti,
-        Map("terrai_cod" -> "terrai_cod", "terrai_nom" -> "ti_nome"), "ti_checked")
-      case None => withUc
-        .withColumn("terrai_cod", lit(null).cast("string"))
-        .withColumn("ti_nome", lit(null).cast("string"))
-        .withColumn("ti_checked", lit(true))
-    }
-  }
+    * (21_enrich_biomas_ucs_tis.sql:33-43,62-73,92-103), one layer per dim
+    * in that order: (dim, dim column -> output column, checked flag). A
+    * missing dim yields null output columns with the checked flag still set
+    * (the reference marks rows checked even when no polygon matches,
+    * :47-58). */
+  private def enrichDims(withMun: DataFrame): DataFrame =
+    Seq((Some(biomas), Map("cd_bioma" -> "cd_bioma", "bioma_nome" -> "bioma"), "bioma_checked"),
+      (ucs, Map("cd_cnuc" -> "cd_cnuc", "nome_uc" -> "uc_nome"), "uc_checked"),
+      (tis, Map("terrai_cod" -> "terrai_cod", "terrai_nom" -> "ti_nome"), "ti_checked"))
+      .foldLeft(withMun) {
+        case (df, (Some(dim), outCols, flag)) => Enrich.enrichFirstMatch(df, dim, outCols, flag)
+        case (df, (None, outCols, flag)) => outCols.values
+          .foldLeft(df)((acc, c) => acc.withColumn(c, lit(null).cast("string")))
+          .withColumn(flag, lit(true))
+      }
 
   /** The `file_date` window a rebuild of the `grain` period starting at
     * `start` reads: a partition predicate, so a rebuild scans O(retention)
@@ -342,16 +336,16 @@ final class Pipeline(spark: SparkSession, root: String,
   /** All mart names, in the reference's file order. */
   val allMarts: Seq[String] = Marts.table.map(_.name)
 
-  /** All marts for one day (delete-day-then-insert ≡ dynamic partition
-    * overwrite; the hard-coded file order 10,11,20,21,30 + dashboard layer,
-    * src/etl/marts_runner.py:16-34). `only`: rebuild a subset of marts — a
-    * backfill that touched one dimension doesn't pay for the other eleven
+  /** All stored marts for one day (delete-day-then-insert ≡ dynamic
+    * partition overwrite; the hard-coded file order 10,11,20,21 + dashboard
+    * layer, src/etl/marts_runner.py:16-34 — file 30 is a view, computed on
+    * read by `Marts.focosDiarioUfTrend`). `only`: rebuild a subset of marts —
+    * a backfill that touched one dimension doesn't pay for the other ten
     * tables (the reference's marts_runner applies whatever SQL files it is
     * pointed at). Default rebuilds everything; an unknown name fails. */
   def writeMarts(d: Date, only: Set[String] = allMarts.toSet): Unit = {
     requireKnown(only)
     val chosen = Marts.table.filter(m => only(m.name))
-    val counted = chosen.filter(_.over.isEmpty)
     // The target periods: the run day and its month, for the grains the
     // chosen marts count per. One scan of enriched/ covers their windows
     // (the month of d ± retention), and one grouping-sets aggregate counts
@@ -360,43 +354,29 @@ final class Pipeline(spark: SparkSession, root: String,
     // driver-local rows: nothing is cached, and a write runs no aggregate.
     val month = Date.valueOf(d.toLocalDate.withDayOfMonth(1))
     val targets = Map("day" -> Seq(d), "month" -> Seq(month))
-      .filter { case (grain, _) => counted.exists(_.grain == grain) }
-    val built = if (counted.isEmpty) Map.empty[String, DataFrame] else {
+      .filter { case (grain, _) => chosen.exists(_.grain == grain) }
+    if (chosen.nonEmpty) {
       val scan = readTable("enriched").filter(targets.toSeq
         .flatMap { case (grain, ts) => ts.map(window(grain, _)) }.reduce(_ || _))
-      Marts.rebuild(scan, counted, targets, window, ufAreaDim)
-        .map { case (m, rows) => m.name -> rows }.toMap
-    }
-    def write(m: Marts.Mart): Unit = {
-      val out = s"marts/${m.name}"
-      m.over match {
-        case Some(src) =>
-          val rows = m(readTable(s"marts/${src.name}"))
-          rows.write.mode("overwrite").parquet(path(out))
-          noteWrite(out, rows, Seq.empty)
-        case None =>
+      // The marts are INDEPENDENT writes to distinct paths, each a small job
+      // followed by driver-side commit/listing latency. Submitting them from
+      // a bounded pool overlaps one mart's driver latency with another's
+      // write instead of serializing ~11 × (plan + job + commit) — the §2.6
+      // back-fill pattern. One task per mart. 3 in flight: on 4 cores, traced
+      // perfbench daily_refetch read 1.83/2.01 s of marts per day at 3
+      // threads against 2.05/1.71 s at 4 and 1.78/1.87 s at 6, so more
+      // threads buy nothing. Job groups and descriptions are thread-local,
+      // so per-thread submission also keeps the UI attribution correct.
+      // inParallel awaits ALL before surfacing the first failure, so no
+      // write is still in flight when the caller sees the exception.
+      Pipeline.inParallel(Marts.rebuild(scan, chosen, targets, window, ufAreaDim).map {
+        case (m, rows) => () =>
           // one file per written partition: the rows are local and few
-          val rows = built(m.name)
+          val out = s"marts/${m.name}"
           Marts.writePartitioned(rows.coalesce(1), path(out), m.grain)
           noteWrite(out, rows, Seq(m.grain))
-      }
+      }, threads = 3)
     }
-    // The marts are INDEPENDENT writes to distinct paths, each a small job
-    // followed by driver-side commit/listing latency. Submitting them from
-    // a bounded pool overlaps one mart's driver latency with another's
-    // write instead of serializing ~12 × (plan + job + commit) — the §2.6
-    // back-fill pattern. One task per counted mart; a view runs on its
-    // source's task, after it. 3 in flight: on 4 cores, traced perfbench
-    // daily_refetch read 1.83/2.01 s of marts per day at 3 threads against
-    // 2.05/1.71 s at 4 and 1.78/1.87 s at 6, so more threads buy nothing.
-    // Job groups and descriptions are thread-local, so per-thread
-    // submission also keeps the UI attribution correct. inParallel awaits
-    // ALL before surfacing the first failure, so no write is still in
-    // flight when the caller sees the exception.
-    val tasks = chosen.filterNot(m => m.over.exists(chosen.contains))
-      .map(m => m +: chosen.filter(_.over.contains(m)))
-    Pipeline.inParallel(tasks.map(ms => () => ms.foreach(write)), threads = 3)
-    ()
   }
 
   /** Checked-flag read path: re-enrich only rows some dimension has not

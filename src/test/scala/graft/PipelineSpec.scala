@@ -382,10 +382,12 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   /** Every stored mart after two days and a rebuild of the first day's
-    * marts (which then sees the second file's January view-day row):
-    * schema as name:type in stored order, and the rows sorted as strings. */
-  test("golden marts: the twelve stored marts over cross-day and " +
+    * marts (which then sees the second file's January view-day row), and
+    * the trend view over the stored daily UF mart: schema as name:type in
+    * stored order, and the rows sorted as strings. */
+  test("golden marts: the eleven stored marts over cross-day and " +
     "cross-month view days, null and unparsable view_ts") {
+    import graft.marts.Marts
     val dir = Files.createTempDirectory("graft_golden_marts")
     val root = dir.resolve("wh").toString
     val p = new Pipeline(spark, root, municipios, biomas, Some(ucs), Some(tis))
@@ -393,11 +395,10 @@ class PipelineSpec extends AnyFunSuite {
     p.runDay(writeGoldenCsv(dir, jan31), jan31)
     p.runDay(writeGoldenCsv(dir, feb1), feb1)
     p.writeMarts(java.sql.Date.valueOf(jan31))
-    def stored(name: String): (String, Seq[String]) = {
-      val df = spark.read.parquet(s"$root/marts/$name")
+    def shown(df: DataFrame): (String, Seq[String]) =
       (df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(","),
         df.collect().map(_.toSeq.mkString("|")).toSeq.sorted)
-    }
+    def stored(name: String): DataFrame = spark.read.parquet(s"$root/marts/$name")
     val mun = "mun_cd_mun:string,mun_nm_mun:string,mun_uf:string," +
       "mun_area_km2:double,n_focos:bigint,focos_por_100km2:decimal(37,4)"
     val uf = "uf:string,n_focos:bigint,uf_area_km2:double,focos_por_100km2:decimal(37,4)"
@@ -455,8 +456,10 @@ class PipelineSpec extends AnyFunSuite {
           "RO|RO|1100015|Alpha|Amazonia|1|UC X|42|null|null|2|2024-01-31",
           "RO|RO|1100015|Alpha|Amazonia|1|null|null|TI Y|7|1|2024-02-01",
           "null|null|null|null|null|null|null|null|null|null|1|2024-01-31")))
-    assert(p.allMarts.toSet == golden.keySet)
-    for ((name, want) <- golden) assert(stored(name) == want, name)
+    val trend = "focos_diario_uf_trend"
+    assert(p.allMarts.toSet == golden.keySet - trend)
+    for ((name, want) <- golden - trend) assert(shown(stored(name)) == want, name)
+    assert(shown(Marts.focosDiarioUfTrend(stored("focos_diario_uf"))) == golden(trend))
   }
 
   /** The golden days plus two facts written straight into enriched/: one in
@@ -494,7 +497,7 @@ class PipelineSpec extends AnyFunSuite {
         df.collect().map(_.toSeq.mkString("|")).toSeq.sorted)
     for (day <- Seq(jan31, feb1)) {
       p.writeMarts(java.sql.Date.valueOf(day))
-      for (m <- Marts.table if m.over.isEmpty) {
+      for (m <- Marts.table) {
         val start = if (m.grain == "day") day else day.withDayOfMonth(1)
         val inPeriod = col(m.grain) === lit(java.sql.Date.valueOf(start))
         val stored = spark.read.parquet(s"$root/marts/${m.name}").filter(inPeriod)
@@ -519,7 +522,7 @@ class PipelineSpec extends AnyFunSuite {
       .head().getAs[Int]("focos") == 3)
   }
 
-  test("writeMarts runs at most 16 Spark jobs for a day's twelve marts and " +
+  test("writeMarts runs at most 16 Spark jobs for a day's eleven marts and " +
     "persists nothing") {
     val (p, _, _) = fixture
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
@@ -548,6 +551,30 @@ class PipelineSpec extends AnyFunSuite {
       spark.read.parquet(dir.resolve("wh2/marts/focos_mensal_ti").toString).collect().toSet)
     assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
       "writeMarts left a cached frame behind")
+  }
+
+  /** The trend is not stored: it is computed on read over the daily UF
+    * mart, so a rebuild of that mart alone after a late file leaves no
+    * trend table behind it to go stale. */
+  test("the UF trend is a view: a late file rebuilt into the daily UF mart " +
+    "alone stores no trend table, and the view carries the late row") {
+    import graft.marts.Marts
+    val dir = Files.createTempDirectory("graft_trend_view")
+    val root = dir.resolve("wh").toString
+    val p = new Pipeline(spark, root, municipios, biomas, Some(ucs), Some(tis))
+    p.runDay(writeDailyCsv(dir, d1), d1) // default: every mart
+    val late = dir.resolve(s"$d1-late.csv")
+    Files.writeString(late, "latitude;longitude;data_hora_gmt;satelite\n" +
+      s"9,1;2,2;$d1 18:00:00;AQUA\n")
+    assert(p.runDayFrom(Ingest.readCsv(spark, late.toString), d1, Set.empty)("inserted") == 1)
+    p.writeMarts(java.sql.Date.valueOf(d1), Set("focos_diario_uf"))
+    val listed = Files.list(dir.resolve("wh/marts")).toArray.map(_.toString.split('/').last)
+    assert(listed.toSeq.sorted == p.allMarts.sorted)
+    assert(!listed.contains("focos_diario_uf_trend"))
+    val view = Marts.focosDiarioUfTrend(spark.read.parquet(s"$root/marts/focos_diario_uf"))
+      .filter(col("day") === lit(java.sql.Date.valueOf(d1))).collect()
+      .map(r => r.getAs[String]("uf") -> r.getAs[Long]("n_focos")).toMap
+    assert(view == Map("RO" -> 4L, "AC" -> 2L))
   }
 
   test("unknown mart names fail before anything is written; an empty set is valid") {
