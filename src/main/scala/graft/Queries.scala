@@ -7192,7 +7192,6 @@ object Queries {
           T(s, d, "events").filter(col("event_id") % 10 === 0), day.toString),
           day, Set.empty)
         // doctor the partition into the "UC arrived late" state
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         val doctored = s.read.parquet(s"$root/enriched")
           .filter(col("file_date") === dlit)
           .withColumn("uc_checked", lit(false))
@@ -7200,7 +7199,8 @@ object Queries {
           .withColumn("uc_nome", lit(null).cast("string"))
         doctored.write.mode("overwrite").parquet(s"$root/doctored")
         s.read.parquet(s"$root/doctored").withColumn("file_date", dlit)
-          .write.mode("overwrite").partitionBy("file_date").parquet(s"$root/enriched")
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("file_date").parquet(s"$root/enriched")
         val nUnchecked = p.reenrichDay(day)
         // one aggregation pass instead of three filtered count() actions —
         // the three verification counts are conditional sums over the same

@@ -137,9 +137,4 @@ object Enrich {
       .drop(extraOrder: _*)
       .drop(outCols.keys.toSeq.filterNot(k => outCols(k) == k): _*)
   }
-
-  /** J1 — new-rows-only increment: curated rows whose hash is not yet
-    * enriched (20_enrich_municipio.sql:31-41). */
-  def newRowsOnly(curated: DataFrame, enriched: DataFrame): DataFrame =
-    curated.join(enriched.select("event_hash"), Seq("event_hash"), "left_anti")
 }

@@ -177,7 +177,9 @@ object Ingest {
   /** K1 — idempotent append: only rows whose event_hash is not already in
     * the target partition (ON CONFLICT DO NOTHING analog,
     * src/etl/load/postgis.py:69-94). Existing side is pruned to the same
-    * file_date partition so the anti-join never scans history.
+    * file_date partition so the anti-join never scans history. The same
+    * anti-join is J1's new-rows-only enrich increment: curated rows whose
+    * hash is not yet enriched (20_enrich_municipio.sql:31-41).
     */
   def idempotentAppend(newRows: DataFrame, existing: DataFrame): DataFrame =
     newRows.join(existing.select("event_hash"), Seq("event_hash"), "left_anti")

@@ -292,92 +292,6 @@ object Marts {
     df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(path)
 
-  /** Range-sorted write: repartitionByRange + sortWithinPartitions on
-    * `sortCols` before writing, so every output file covers a DISJOINT
-    * range of the sort key and parquet footer min/max statistics let
-    * point/range scans skip whole files (the Z-order-lite of a single-key
-    * access pattern — `day`/`cd_mun` lookups in the serve layer). One
-    * range exchange at write time buys file-level pruning on every
-    * subsequent read.
-    */
-  def writeSorted(df: DataFrame, path: String, parts: Int,
-                  sortCols: Seq[String]): Unit = {
-    val cs = sortCols.map(col)
-    df.repartitionByRange(parts, cs: _*)
-      .sortWithinPartitions(cs: _*)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Bloom-filtered parquet write: per-column bloom filters in the file
-    * footer, for point-lookup row-group skipping on HIGH-CARDINALITY keys
-    * (hashes, uuids, event ids) where min/max footer stats cannot prune —
-    * every file spans the whole key space, so [[writeSorted]]'s range
-    * trick does nothing, but a bloom probe rejects absent keys at the
-    * footer. This is the read-side complement of the runtime
-    * BloomFilterAggregate in `Blocklist`: that one prunes a JOIN's probe
-    * side at execution time, this one prunes the SCAN at storage time.
-    *
-    * @param ndv expected distinct values per file — sizes the filter
-    *            (parquet default caps at 1 MiB/filter when overshot)
-    */
-  def writeBloom(df: DataFrame, path: String, bloomCols: Seq[String],
-                 ndv: Long = 100000L): Unit = {
-    val w = bloomCols.foldLeft(df.write.mode("overwrite")) { (wr, c) =>
-      wr.option(s"parquet.bloom.filter.enabled#$c", "true")
-        .option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
-    }
-    w.parquet(path)
-  }
-
-  /** Small-files compaction: rewrite a parquet dataset into files of
-    * ~`targetFileBytes` (by on-disk input size, a good proxy after
-    * re-encoding at matching compression). Incremental per-day mart
-    * appends accumulate one-file-per-task fragments; scans of a
-    * many-small-files table pay per-file open/footer costs and tiny
-    * row-groups, so periodic compaction is part of the 100 TB write-path
-    * hygiene. Writes to `outPath` (atomic swap is the caller's move —
-    * write-new + rename keeps readers consistent, as the reference's
-    * delete-day-then-insert does transactionally in Postgres).
-    * Returns (input file count, output partition count).
-    */
-  def compactTo(spark: org.apache.spark.sql.SparkSession, inPath: String,
-                outPath: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(inPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val rootUri = p.toUri.getPath
-    // recursive: partitioned datasets keep data files under key=value
-    // subdirs. Skip files under hidden ancestors too (_temporary,
-    // .hive-staging…) — spark.read ignores them, so counting their bytes
-    // would inflate the file budget with dead data.
-    val it = fs.listFiles(p, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .filter { s =>
-        val rel = s.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-        s.isFile && rel.split('/').forall(seg =>
-          !seg.startsWith("_") && !seg.startsWith("."))
-      }.toVector
-    val totalBytes = files.map(_.getLen).sum
-    // hive-style partition dirs (key=value) must survive the rewrite, or
-    // the compacted copy loses directory pruning and per-partition
-    // overwrite targeting
-    val partCols = files.flatMap(_.getPath.toUri.getPath
-        .stripPrefix(rootUri).split('/').dropRight(1)
-        .filter(_.contains('=')).map(_.takeWhile(_ != '=')))
-      .distinct
-    val df = spark.read.parquet(inPath)
-    // coalesce, not repartition: shrinking file count must not shuffle.
-    // coalesce cannot raise the partition count, so clamp to what the scan
-    // yields and report the count actually used.
-    val parts = math.min(
-      math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt),
-      math.max(1, df.rdd.getNumPartitions))
-    val writer = df.coalesce(parts).write.mode("overwrite")
-    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-      .parquet(outPath)
-    (files.length, parts)
-  }
-
   /** Bucketed managed-table write: pre-shuffles once at write time so every
     * later equi-join/aggregation on `bucketCols` between co-bucketed tables
     * runs with NO exchange (sort-merge join straight off the scans — the
@@ -399,52 +313,4 @@ object Marts {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Z-order (Morton-curve) clustered write: multi-dimensional locality so
-    * parquet footer stats prune files for predicates on ANY clustering
-    * column — the multi-column complement of [[writeSorted]], which makes
-    * one key chain prunable and leaves every other column covering the
-    * full range in every file. Each row's clustering values are scaled to
-    * `bits`-bit grid cells (one cheap global min/max pass) and their bits
-    * interleaved into a single Morton code; a range exchange + in-partition
-    * sort on that code gives every output file a contiguous curve segment
-    * ≈ a small spatial tile, so per-file min/max of EACH dimension is a
-    * fraction of its domain. Pure codegen bit arithmetic — no UDF. The
-    * classic layout for bbox-style scans (lon/lat) and (day, key) marts at
-    * 100 TB, where no single sort order serves all query dimensions.
-    * The oracle-checkable audit twin (integer-exact 2-D Morton + bucket
-    * span stats, mirrored in DuckDB SQL) is [[graft.operators.Layout]].
-    */
-  def writeZOrdered(df: DataFrame, path: String, parts: Int,
-                    zCols: Seq[String], bits: Int = 16): Unit = {
-    require(bits >= 1 && zCols.nonEmpty && zCols.size * bits <= 63,
-      s"need 1..${63 / math.max(1, bits)} columns at $bits (>=1) bits")
-    val mins = zCols.map(c => min(col(c).cast("double")).as(s"mn_$c"))
-    val maxs = zCols.map(c => max(col(c).cast("double")).as(s"mx_$c"))
-    val st = df.agg((mins ++ maxs).head, (mins ++ maxs).tail: _*).head()
-    val n = zCols.size
-    val top = (1L << bits) - 1
-    val cells = zCols.zipWithIndex.map { case (c, i) =>
-      // null stats = empty input or an all-null column: no spread to
-      // cluster on, degrade to cell 0 instead of an opaque NPE
-      if (st.isNullAt(i) || st.isNullAt(n + i)) lit(0L)
-      else {
-        val (mn, mx) = (st.getDouble(i), st.getDouble(n + i))
-        if (mx <= mn) lit(0L)
-        else least(lit(top), coalesce(
-          floor((col(c).cast("double") - mn) / (mx - mn) * (top + 1)).cast("long"),
-          lit(0L)))
-      }
-    }
-    val morton = (0 until bits).flatMap { b =>
-      cells.zipWithIndex.map { case (cell, i) =>
-        shiftleft(shiftright(cell, b).bitwiseAND(1), b * n + i)
-      }
-    }.reduce(_.bitwiseOR(_))
-    df.withColumn("__z", morton)
-      .repartitionByRange(parts, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-  }
 }

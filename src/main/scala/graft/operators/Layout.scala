@@ -17,12 +17,10 @@ import org.apache.spark.sql.functions._
   * itself is codegen'd integer arithmetic (sub/mul/div/shift/mask/or) —
   * row-local apart from the one tiny min/max aggregate, which broadcasts.
   *
-  * Relationship to [[graft.marts.Marts.writeZOrdered]] (the WRITE path):
-  * that one clusters n columns with double-based grid scaling, which is
-  * fine for layout but not bit-reproducible in an external engine. This
-  * module is the AUDIT side: 2-column, all-integer arithmetic kept in
-  * lockstep with a DuckDB SQL mirror ([[zorderStatsSql]]) so the layout
-  * quality claim itself is oracle-checkable.
+  * The code is 2-column, all-integer arithmetic kept in lockstep with a
+  * DuckDB SQL mirror ([[zorderStatsSql]]), so the layout quality claim
+  * itself is oracle-checkable; a double-based grid scaling would be fine
+  * for layout but not bit-reproducible in an external engine.
   */
 object Layout {
 

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import graft.enrich.Enrich
 import graft.ingest.Ingest
 import graft.marts.Marts
+import graft.sources.Sources
 
 object Pipeline {
   /** Upper bound on one [[inParallel]] call (r18 VERDICT item 4):
@@ -82,8 +83,7 @@ object Pipeline {
   */
 final class Pipeline(spark: SparkSession, root: String,
                      municipios0: DataFrame, biomas0: DataFrame,
-                     ucs0: Option[DataFrame] = None, tis0: Option[DataFrame] = None,
-                     retentionDays: Int = 45) {
+                     ucs0: Option[DataFrame] = None, tis0: Option[DataFrame] = None) {
 
   private def path(p: String) = s"$root/$p"
 
@@ -205,8 +205,8 @@ final class Pipeline(spark: SparkSession, root: String,
   private def window(grain: String, start: Date): Column = {
     val ld = start.toLocalDate
     val end = if (grain == "day") ld else ld.withDayOfMonth(ld.lengthOfMonth)
-    col("file_date").between(lit(Date.valueOf(ld.minusDays(retentionDays))),
-      lit(Date.valueOf(end.plusDays(retentionDays))))
+    col("file_date").between(lit(Date.valueOf(ld.minusDays(Sources.RetentionDays))),
+      lit(Date.valueOf(end.plusDays(Sources.RetentionDays))))
   }
 
   /** The facts the daily municipality and UF marts of day `d` read. */
@@ -230,15 +230,13 @@ final class Pipeline(spark: SparkSession, root: String,
     requireKnown(marts)
     val d = Date.valueOf(fileDate)
 
-    // E+T: CSV → curated records. Both load counts ride the write job as
-    // Observations — `attempted` on the pre-cache transform output,
-    // `inserted` on the anti-joined frame — so the K3 accounting costs
-    // ZERO extra passes: counting `fresh` with a separate action would
-    // re-run the left-anti join over the batch, a whole second scan at
-    // production scale.
-    val obsAttempted = org.apache.spark.sql.Observation()
-    val records = Ingest.transform(raw, d)
-      .observe(obsAttempted, count(lit(1)).as("n")).cache()
+    // E+T: CSV → curated records. `attempted` is the count that
+    // materializes this cache below; `inserted` rides the curated write job
+    // as an Observation on the anti-joined frame, so the K3 accounting costs
+    // no extra pass: counting `fresh` with a separate action would re-run
+    // the left-anti join over the batch, a whole second scan at production
+    // scale.
+    val records = Ingest.transform(raw, d).cache()
 
     // L: idempotent append against the same file_date partition only
     val existing = readOrEmpty(s"curated/file_date=$fileDate", records.drop("file_date"))
@@ -261,16 +259,13 @@ final class Pipeline(spark: SparkSession, root: String,
     // accumulate leaked cache entries across failed days
     try {
       // Materialize the records cache with ONE action before the two
-      // concurrent writers start: obsAttempted's CollectMetrics lives
-      // INSIDE the cached plan, and a materialization split across two
-      // racing jobs would fire the Observation with a partial count (each
-      // execution observes only the partitions IT computed). Must be a SQL
-      // action (`count()`), NOT `queryExecution.toRdd` — a raw RDD action
-      // skips SQLExecution.withNewExecutionId, the QueryExecutionListener
-      // never fires, and obs.get blocks forever (measured: PipelineSpec
-      // hangs). One extra tiny job; both writers then read the warm cache.
-      records.count()
-      val attempted = obsAttempted.get("n").asInstanceOf[Long]
+      // concurrent writers start: both read `records` (the curated append
+      // through `fresh`, the enrich chain through `curatedDay`), and left
+      // cold the cache would be built inside whichever racing job reached
+      // each partition first, the other job's tasks blocking on it. The same
+      // action is the K3 `attempted` count; both writers then read the warm
+      // cache.
+      val attempted = records.count()
 
       // The curated append and the enrich chain are INDEPENDENT writes to
       // distinct stores: the enrich input is EXACTLY existing ∪ fresh —
@@ -282,7 +277,8 @@ final class Pipeline(spark: SparkSession, root: String,
       // writes' driver latencies overlap (§2.6) instead of serializing.
       // Crash safety is order-free: an interrupted run leaves an orphan on
       // EITHER side and the next runDay heals both — a curated row missing
-      // from enriched re-enriches via newRowsOnly; an enriched row missing
+      // from enriched re-enriches via the `event_hash` anti-join
+      // (Ingest.idempotentAppend against `already`); an enriched row missing
       // from curated re-inserts via the anti-join and is NOT re-enriched
       // (its event_hash is already in `already`) — PipelineSpec pins both
       // directions ("curatedDay union view…", "crash heal, enriched
@@ -310,7 +306,7 @@ final class Pipeline(spark: SparkSession, root: String,
       val already = readOrEmpty("enriched", curatedDay)
       val newRows =
         if (already.columns.contains("event_hash"))
-          Enrich.newRowsOnly(curatedDay, already.filter(col("file_date") === lit(d)))
+          Ingest.idempotentAppend(curatedDay, already.filter(col("file_date") === lit(d)))
         else curatedDay
       val enriched = enrichDims(Enrich.enrichMunicipio(newRows, municipios))
       Pipeline.inParallel(Seq(

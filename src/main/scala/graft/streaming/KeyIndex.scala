@@ -84,10 +84,9 @@ object KeyIndex {
     * (None = index absent/invalid: refresh rebuilds from scratch). */
   final case class Probe(frame: DataFrame, manifest: Option[Manifest])
 
-  def enabled(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.keyIndex.enabled", "true").toBoolean
-  private def confBuckets(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.keyIndex.buckets", "1024").toInt
+  /** Bucket count of a NEW index; an existing one keeps the count its
+    * manifest records. */
+  private val Buckets = 1024
   private def compactAt(spark: SparkSession): Int =
     spark.conf.get("spark.graft.keyIndex.compactAt", "64").toInt
   // Below this target size the index CANNOT win: the full keyCols scan is
@@ -112,30 +111,7 @@ object KeyIndex {
     * (object-store targets pay real latency per traversal). */
   def probe(spark: SparkSession, targetPath: String, keyCols: Seq[String],
             once: DataFrame,
-            listing: Option[Map[String, Long]] = None): Probe =
-    probeImpl(spark, targetPath, keyCols, once, prune = true, listing)
-
-  /** UNPRUNED whole-key-set view, for consumers that need EVERY target
-    * key each batch (e.g. [[StreamingJobs.admitNearSink]]'s within-run
-    * near-dup union, where the neighbors of a batch signature live in
-    * arbitrary buckets, so bucket/envelope pruning would be unsound):
-    * manifest key files ∪ uncovered-file scan — the same key set as a
-    * full target read, but served from the compacted bucket-sorted
-    * sidecar (few files, keyCols-only) plus a batch-sized delta instead
-    * of listing and opening every target data file per microbatch. Falls
-    * back to the full target keyCols scan when the index is absent or
-    * invalid. Soundness both ways: the manifest's covered-⊆-current
-    * check guarantees the index holds exactly the covered files' keys
-    * (no stale extras), and ∪ uncovered closes the gap to the target. */
-  def fullKeys(spark: SparkSession, targetPath: String, keyCols: Seq[String],
-               once: DataFrame,
-               listing: Option[Map[String, Long]] = None): Probe =
-    probeImpl(spark, targetPath, keyCols, once, prune = false, listing)
-
-  private def probeImpl(spark: SparkSession, targetPath: String,
-                        keyCols: Seq[String], once: DataFrame,
-                        prune: Boolean,
-                        listing: Option[Map[String, Long]]): Probe = {
+            listing: Option[Map[String, Long]] = None): Probe = {
     val root = new Path(targetPath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val current = listing.getOrElse(listDataFiles(fs, root))
@@ -147,19 +123,16 @@ object KeyIndex {
     }
     mOpt match {
       case Some(m) =>
-        val env =
-          if (prune) StreamingJobs.envelopeFilter(once, keyCols) else lit(true)
+        val env = StreamingJobs.envelopeFilter(once, keyCols)
         val idxFrame =
           if (m.keyDirs.isEmpty) None
           else {
             val dirs = m.keyDirs.map(d => new Path(idx, d).toString)
             val raw = spark.read.parquet(dirs: _*)
-            val bucketed =
-              if (!prune) raw
-              else batchBuckets(once, keyCols, m.buckets) match {
-                case Some(bs) => raw.filter(col(BucketCol).isin(bs: _*))
-                case None => raw
-              }
+            val bucketed = batchBuckets(once, keyCols, m.buckets) match {
+              case Some(bs) => raw.filter(col(BucketCol).isin(bs: _*))
+              case None => raw
+            }
             Some(bucketed.filter(env).select(keyCols.map(col): _*))
           }
         val uncovered = current.keysIterator.filterNot(m.covered.contains).toSeq.sorted
@@ -173,12 +146,7 @@ object KeyIndex {
           .getOrElse(once.select(keyCols.map(col): _*).limit(0))
         Probe(frame, Some(m))
       case None =>
-        Probe(
-          if (prune)
-            StreamingJobs.prunedTargetKeys(spark, targetPath, keyCols, once)
-          else
-            spark.read.parquet(targetPath).select(keyCols.map(col): _*),
-          None)
+        Probe(StreamingJobs.prunedTargetKeys(spark, targetPath, keyCols, once), None)
     }
   }
 
@@ -195,7 +163,8 @@ object KeyIndex {
 
   /** `pmod(xxhash64(hashable key cols), buckets)` — None when no key col
     * is hashable. Both the writer and every probe MUST use the manifest's
-    * bucket count, never the live conf, or old files prune wrongly.
+    * bucket count, never [[Buckets]], or files of an index built under
+    * another count prune wrongly.
     * xxhash64 folds a null input deterministically (seed carry), so the
     * all-null key lands in a stable bucket on both sides. */
   private def bucketExpr(df: DataFrame, keyCols: Seq[String],
@@ -263,7 +232,7 @@ object KeyIndex {
       m.covered.forall { case (p, l) => current.get(p).contains(l) } &&
         batchTypes.forall(_ == m.keyTypes))
     val covered0 = prior0.map(_.covered).getOrElse(Map.empty[String, Long])
-    val buckets = prior0.map(_.buckets).getOrElse(confBuckets(spark))
+    val buckets = prior0.map(_.buckets).getOrElse(Buckets)
     val delta = current.filterNot { case (p, l) => covered0.get(p).contains(l) }
     val oldDirs = prior0.map(_.keyDirs).getOrElse(Nil)
     if (delta.isEmpty && prior0.isDefined && oldDirs.size <= compactAt(spark)) return
@@ -303,14 +272,12 @@ object KeyIndex {
       } else deltaFrame match {
         case Some(df) =>
           val dir = "keys-" + java.util.UUID.randomUUID().toString
-          // microbatch deltas coalesce to one file; a BOOTSTRAP or
-          // rebuild delta (the whole target) must not funnel a huge scan
-          // + sort through a single task — above the threshold it takes
-          // the same bucket-range layout compaction writes
-          val big = delta.valuesIterator.sum >
-            spark.conf.get("spark.graft.keyIndex.bigDeltaBytes",
-              (512L * 1024 * 1024).toString).toLong
-          (if (big) df.repartitionByRange(math.max(1, buckets / 128), col(BucketCol))
+          // an incremental delta (the files one microbatch wrote, or a
+          // crash orphan) coalesces to one file; a BOOTSTRAP or rebuild
+          // delta (no prior: the whole target) must not funnel a huge
+          // scan + sort through a single task — it takes the same
+          // bucket-range layout compaction writes
+          (if (prior0.isEmpty) df.repartitionByRange(math.max(1, buckets / 128), col(BucketCol))
            else df.coalesce(1))
             .sortWithinPartitions(BucketCol)
             .write.mode("overwrite").parquet(new Path(idx, dir).toString)

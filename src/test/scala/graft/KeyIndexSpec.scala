@@ -268,12 +268,9 @@ class KeyIndexSpec extends AnyFunSuite
     assert(pre.manifest.isEmpty)
     assert(pre.frame.join(digestRows(0 until 50), Seq("k"), "left_semi")
       .count() == 50)
-    // bootstrap with the big-delta threshold forced below the target size:
-    // the whole-target delta must take the bucket-range layout, not
-    // funnel through coalesce(1)
-    spark.conf.set("spark.graft.keyIndex.bigDeltaBytes", "1")
-    try KeyIndex.refresh(spark, target, Seq("k"), None)
-    finally spark.conf.unset("spark.graft.keyIndex.bigDeltaBytes")
+    // bootstrap: with no prior the delta is the whole target, which must
+    // take the bucket-range layout, not funnel through coalesce(1)
+    KeyIndex.refresh(spark, target, Seq("k"), None)
     val m = KeyIndex.readManifest(fs, idx).get
     assert(m.covered.size == 4 && m.keyDirs.size == 1)
     assert(!fs.exists(orphan), "crash orphan survived the bootstrap GC")
@@ -460,7 +457,7 @@ class KeyIndexSpec extends AnyFunSuite
   }
 
   test("admitNearSink probes through the sidecar (r17 VERDICT #1): index " +
-    "at the sig key, replay blocked, crash heals, within-run union served") {
+    "at the sig key, replay blocked, crash heals") {
     import spark.implicits._
     def sigOf(i: Int): String = {
       val r = new java.util.Random(0x51600d + i * 7919L)
@@ -469,14 +466,13 @@ class KeyIndexSpec extends AnyFunSuite
     val target = tmp("graft_kidx_anear") + "/t"
     val hist = Seq.empty[Tuple1[String]].toDF("sig")
     val schema = Seq((1L, "x")).toDF("id", "sig").schema
-    def run(rows: Seq[(Long, String)], withinRun: Boolean = false): Unit =
+    def run(rows: Seq[(Long, String)]): Unit =
       StreamingJobs.withDrainParallelism(spark) {
         val in = tmp("graft_kidx_anear_in")
         rows.toDF("id", "sig").write.mode("overwrite").parquet(in)
         val q = StreamingJobs.admitNearSink(
           spark.readStream.schema(schema).parquet(in), hist, target,
-          tmp("graft_kidx_anear_ck"), "id", "sig",
-          nearDedupWithinRun = withinRun)
+          tmp("graft_kidx_anear_ck"), "id", "sig")
         q.awaitTermination(); q.stop()
       }
     val batch1 = (0 until 300).map(i => (i.toLong, sigOf(i)))
@@ -499,20 +495,6 @@ class KeyIndexSpec extends AnyFunSuite
     assert(spark.read.parquet(target).count() == 350)
     val m2 = KeyIndex.readManifest(fs, new Path(target, KeyIndex.DirName)).get
     assert(m2.covered.size > m.get.covered.size, "refresh did not heal")
-    // within-run mode: a hamming-1 twin of a TARGET-resident (not
-    // history) signature must be rejected — proves the near-union is
-    // really served from the sidecar's full key set
-    val twin = {
-      val s = sigOf(0)
-      (if (s.head == '0') "1" else "0") + s.tail
-    }
-    run(Seq((999L, twin)), withinRun = true)
-    assert(spark.read.parquet(target).count() == 350,
-      "near twin of a target signature admitted in within-run mode")
-    // and in default mode the same twin admits (history is empty) —
-    // the union above was the sidecar's doing, not an accident
-    run(Seq((998L, twin)))
-    assert(spark.read.parquet(target).count() == 351)
   }
 
   test("complex-typed keys (ADVICE r16): array key neither breaks the " +
@@ -526,11 +508,12 @@ class KeyIndexSpec extends AnyFunSuite
     // replay + one new key; the all-null key must not re-append (null-safe)
     drain(rows(Seq(Some(2), None, Some(3))), target)
     assert(spark.read.parquet(target).count() == 4)
-    // the envelope path (index off) analyzes too: no min/max on arrays
-    spark.conf.set("spark.graft.keyIndex.enabled", "false")
-    try {
-      drain(rows(Seq(Some(3), Some(4), None)), target)
-      assert(spark.read.parquet(target).count() == 5)
-    } finally spark.conf.unset("spark.graft.keyIndex.enabled")
+    // the envelope fallback (no index) analyzes too: no min/max on arrays
+    val fs = hfs(target)
+    assert(fs.delete(new Path(target, KeyIndex.DirName), true))
+    assert(KeyIndex.probe(spark, target, Seq("k"),
+      rows(Seq(Some(3), Some(4), None))).manifest.isEmpty)
+    drain(rows(Seq(Some(3), Some(4), None)), target)
+    assert(spark.read.parquet(target).count() == 5)
   }
 }

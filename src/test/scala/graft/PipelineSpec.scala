@@ -311,7 +311,6 @@ class PipelineSpec extends AnyFunSuite {
   test("checked-flags read path: reenrichDay restores a late-arriving dimension") {
     val (p, root, dir2) = fixture
     // simulate "UC dim arrived late": null the UC outputs of day 1 and clear its flag
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val day = spark.read.parquet(s"$root/enriched")
       .filter(col("file_date") === lit(java.sql.Date.valueOf(d1)))
     val doctored = day
@@ -322,7 +321,8 @@ class PipelineSpec extends AnyFunSuite {
     doctored.write.mode("overwrite").parquet(tmp)
     spark.read.parquet(tmp)
       .withColumn("file_date", lit(java.sql.Date.valueOf(d1)))
-      .write.mode("overwrite").partitionBy("file_date").parquet(s"$root/enriched")
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("file_date").parquet(s"$root/enriched")
 
     assert(p.reenrichDay(d1) == 5) // every day-1 row was unchecked
     val redone = spark.read.parquet(s"$root/enriched")
@@ -623,6 +623,23 @@ class PipelineSpec extends AnyFunSuite {
       assert(p.reenrichDay(d1) == 0)
       assert(spark.conf.get(key) == "static")
       assert(p.checkDay(d1).isEmpty && p.checkDay(d2).isEmpty)
+    } finally spark.conf.set(key, before)
+  }
+
+  test("the pipeline_reenrich_flags row overwrites its doctored day with a " +
+    "per-write option and leaves a static session static") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try {
+      val rows = Queries.queries("pipeline_reenrich_flags")(spark, "/root/testdata/sf0.001")
+        .collect()
+      assert(rows.length == 1)
+      val r = rows.head
+      assert(r.getAs[Long]("n_unchecked") > 0)
+      assert(r.getAs[Long]("n_rows") == r.getAs[Long]("n_unchecked"))
+      assert(r.getAs[Long]("n_flags_clear") == 0L)
+      assert(spark.conf.get(key) == "static")
     } finally spark.conf.set(key, before)
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audits: the properties that decide 100 TB behavior, pinned
@@ -277,166 +275,6 @@ class PlanAuditSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS bkt_a")
       spark.sql("DROP TABLE IF EXISTS bkt_b")
     }
-  }
-
-  test("writeSorted: output files cover disjoint key ranges (footer-stat file skipping)") {
-    import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_sorted").toString + "/s"
-    val df = new scala.util.Random(7).shuffle((1 to 4000).toList)
-      .map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    graft.marts.Marts.writeSorted(df, out, parts = 4, Seq("k"))
-    val files = new java.io.File(out).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
-    assert(files.length == 4, s"expected 4 range files, got ${files.length}")
-    // per-file key ranges must not overlap — that's what footer pruning needs
-    val ranges = files.map { f =>
-      val r = spark.read.parquet(f)
-        .agg(org.apache.spark.sql.functions.min("k"),
-          org.apache.spark.sql.functions.max("k")).head()
-      (r.getLong(0), r.getLong(1))
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo, _)) =>
-        assert(hi < lo, s"file ranges overlap: $ranges")
-      case _ =>
-    }
-    assert(spark.read.parquet(out).count() == 4000)
-  }
-
-  test("writeBloom: footers carry a bloom filter for the key column, and it prunes") {
-    import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_bloom").toString + "/b"
-    val df = (1 to 5000).map(i => (s"key_$i", i.toLong)).toDF("k", "v")
-    graft.marts.Marts.writeBloom(df.repartition(1), out, Seq("k"), ndv = 5000L)
-    val file = new java.io.File(out).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val conf = spark.sessionState.newHadoopConf()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(file.getPath), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val rg = reader.getFooter.getBlocks.get(0)
-      val chunk = rg.getColumns.asScala.find(_.getPath.toDotString == "k").get
-      val bloom = reader.readBloomFilter(chunk)
-      assert(bloom != null, "no bloom filter written for column k")
-      // present keys MUST hit; absent keys should overwhelmingly miss
-      def probe(s: String): Boolean = {
-        val b = org.apache.parquet.io.api.Binary.fromString(s)
-        bloom.findHash(bloom.hash(b))
-      }
-      assert(probe("key_1") && probe("key_4999"), "present key missed — broken filter")
-      val falsePos = (1 to 1000).count(i => probe(s"absent_$i"))
-      assert(falsePos < 100, s"bloom rejects nothing: $falsePos/1000 false positives")
-    } finally reader.close()
-    // v has no filter configured — footer must not pay for one
-    val vchunk = {
-      val r2 = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val c = r2.getFooter.getBlocks.get(0).getColumns.asScala
-          .find(_.getPath.toDotString == "v").get
-        r2.readBloomFilter(c)
-      } finally r2.close()
-    }
-    assert(vchunk == null, "unconfigured column got a bloom filter")
-  }
-
-  test("compactTo: many fragments collapse to the computed file budget without a shuffle") {
-    import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft_compact_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_out").toString + "/c"
-    // 24 tiny fragments, the shape left by 24 incremental appends
-    (1 to 24).foreach { i =>
-      Seq((i.toLong, s"row$i")).toDF("k", "v").coalesce(1)
-        .write.mode("append").parquet(in)
-    }
-    val (nIn, nParts) = graft.marts.Marts.compactTo(spark, in, out,
-      targetFileBytes = 1L << 30) // everything fits one file
-    assert(nIn == 24 && nParts == 1, s"got ($nIn, $nParts)")
-    val files = new java.io.File(out).listFiles()
-      .filter(f => f.getName.endsWith(".parquet"))
-    assert(files.length == 1, s"expected 1 compacted file, got ${files.length}")
-    assert(spark.read.parquet(out).count() == 24)
-    assert(spark.read.parquet(out).select("k").as[Long].collect().sorted.toSeq
-      == (1L to 24L))
-    // the compaction mechanism itself must be shuffle-free
-    val cp = spark.read.parquet(in).coalesce(1)
-      .queryExecution.executedPlan.toString
-    assert(!cp.contains("Exchange"), cp)
-  }
-
-  test("compactTo: hive-partitioned dataset is listed recursively and parts clamp to scan splits") {
-    import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft_compact_part_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_part_out").toString + "/c"
-    // 3 partitions × 4 fragments each, all under day=X subdirs — the
-    // pre-fix bug: non-recursive listStatus saw 0 files → totalBytes=0 →
-    // silent coalesce(1) of the whole dataset
-    for (d <- 1 to 3; i <- 1 to 4)
-      Seq((d * 100L + i, s"r$d-$i", d)).toDF("k", "v", "day").coalesce(1)
-        .write.mode("append").partitionBy("day").parquet(in)
-    val (nIn, nParts) = graft.marts.Marts.compactTo(spark, in, out,
-      targetFileBytes = 1L) // absurdly small target: uncapped math would ask
-                            // for more files than the scan has splits
-    assert(nIn == 12, s"recursive listing should see 12 leaf files, got $nIn")
-    val scanParts = spark.read.parquet(in).rdd.getNumPartitions
-    assert(nParts <= scanParts && nParts >= 1, s"parts=$nParts scan=$scanParts")
-    assert(spark.read.parquet(out).count() == 12)
-    // the hive layout must survive compaction — without day=X dirs the
-    // compacted swap-in loses directory pruning
-    val outDirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-      .map(_.getName).toSet
-    assert(outDirs == Set("day=1", "day=2", "day=3"), s"got $outDirs")
-    // dead bytes under hidden dirs (crashed-write leftovers) must not
-    // inflate the input count / byte budget
-    val tmp = new java.io.File(s"$in/_temporary/0")
-    tmp.mkdirs()
-    Seq((999L, "dead", 9)).toDF("k", "v", "day").coalesce(1)
-      .write.mode("overwrite").parquet(tmp.getAbsolutePath + "/x")
-    val out2 = java.nio.file.Files.createTempDirectory("graft_compact_part_out2").toString + "/c"
-    val (nIn2, _) = graft.marts.Marts.compactTo(spark, in, out2, targetFileBytes = 1L)
-    assert(nIn2 == 12, s"files under _temporary must be ignored, got $nIn2")
-  }
-
-  test("writeZOrdered: empty input and all-null columns degrade gracefully") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder_edge").toString
-    val empty = Seq.empty[(Int, Int)].toDF("x", "y")
-    graft.marts.Marts.writeZOrdered(empty, s"$dir/e", 4, Seq("x", "y"), bits = 4)
-    assert(spark.read.parquet(s"$dir/e").count() == 0)
-    val allNull = Seq((Some(1), Option.empty[Int]), (Some(2), Option.empty[Int]))
-      .toDF("x", "y")
-    graft.marts.Marts.writeZOrdered(allNull, s"$dir/n", 2, Seq("x", "y"), bits = 4)
-    assert(spark.read.parquet(s"$dir/n").count() == 2)
-  }
-
-  test("writeZOrdered: every file covers a fraction of BOTH dimensions (plain sort covers all of the second)") {
-    import spark.implicits._
-    // 64×64 uniform grid — the adversarial case for single-column sorting:
-    // an x-sort makes y unprunable (every file spans the full y range)
-    val grid = (for (x <- 0 until 64; y <- 0 until 64) yield (x, y))
-      .toDF("x", "y")
-    def fileCoverage(dir: String, c: String): Seq[Double] = {
-      val files = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
-      files.map { f =>
-        val r = spark.read.parquet(f)
-          .agg(org.apache.spark.sql.functions.min(c),
-            org.apache.spark.sql.functions.max(c)).head()
-        (r.getInt(1) - r.getInt(0) + 1) / 64.0
-      }
-    }
-    val zDir = java.nio.file.Files.createTempDirectory("graft_zorder").toString + "/z"
-    val sDir = java.nio.file.Files.createTempDirectory("graft_zorder").toString + "/s"
-    graft.marts.Marts.writeZOrdered(grid, zDir, 16, Seq("x", "y"), bits = 6)
-    graft.marts.Marts.writeSorted(grid, sDir, 16, Seq("x"))
-    // plain x-sort: y is unprunable — every file spans (nearly) all of y
-    assert(fileCoverage(sDir, "y").forall(_ >= 0.9))
-    // z-order: 16 files ≈ 4×4 curve tiles — BOTH dims bounded per file
-    // (0.25 ideal; range-boundary straddle gives a little slack)
-    val (cx, cy) = (fileCoverage(zDir, "x"), fileCoverage(zDir, "y"))
-    assert(cx.sum / cx.size <= 0.45, s"mean x coverage ${cx.sum / cx.size}: $cx")
-    assert(cy.sum / cy.size <= 0.45, s"mean y coverage ${cy.sum / cy.size}: $cy")
-    assert(spark.read.parquet(zDir).count() == 4096)
   }
 
   test("dedup_incremental: every join is an equi-join — postings probe, digest lookup, never a nested loop") {

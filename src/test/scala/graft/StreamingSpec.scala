@@ -154,41 +154,36 @@ class StreamingSpec extends AnyFunSuite {
     assert(StreamingJobs.prunedTargetKeys(spark, target, Seq("k"), empty).count() == 0)
   }
 
-  test("admitNearSink: nearDedupWithinRun rejects cross-batch near-dups of " +
-    "the SAME run; malformed sigs quarantine (fail-closed); default admits") {
+  test("admitNearSink: cross-batch near-dups of one run both admit; " +
+    "malformed sigs and null ids fail closed") {
     import spark.implicits._
     val base = "01" * 32
     val near = base.dropRight(1) + (if (base.last == '0') "1" else "0")
     val far = "0" * 32 + "1" * 32
-    def runSink(withinRun: Boolean): Set[String] = {
-      val in = Files.createTempDirectory("graft_anear_in").toString
-      val target = Files.createTempDirectory("graft_anear_tgt").toString + "/t"
-      val ck = Files.createTempDirectory("graft_anear_ck").toString
-      // two files → two microbatches (maxFilesPerTrigger=1); mtime order
-      Seq((Option(1L), base)).toDF("id", "sig")
-        .coalesce(1).write.mode("append").parquet(in)
-      Thread.sleep(1100) // file-source ordering is mtime-second-granular
-      // the null-id row carries a perfectly good far signature — it must
-      // STILL be rejected (fail closed): a null id cannot ride the
-      // id-keyed admission anti-join
-      Seq((Option(2L), near), (Option(3L), "not-a-sig"), (Option(4L), far),
-        (None: Option[Long], "10" * 32))
-        .toDF("id", "sig").coalesce(1).write.mode("append").parquet(in)
-      val hist = Seq.empty[Tuple1[String]].toDF("sig")
-      val src = spark.readStream
-        .schema(Seq((Option(1L), "x")).toDF("id", "sig").schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = StreamingJobs.admitNearSink(src, hist, target, ck,
-        "id", "sig", nearDedupWithinRun = withinRun)
-      q.awaitTermination(); q.stop()
-      spark.read.parquet(target).collect().map(_.getAs[String]("sig")).toSet
-    }
-    // within-run: batch 2's near-twin is rejected against the target's
-    // own sigs; the malformed sig fails CLOSED; the far sig admits
-    assert(runSink(withinRun = true) == Set(base, far))
-    // default contract: cross-batch near-dups of one run BOTH admit (the
-    // history-refresh cycle absorbs them); malformed still quarantines
-    assert(runSink(withinRun = false) == Set(base, near, far))
+    val in = Files.createTempDirectory("graft_anear_in").toString
+    val target = Files.createTempDirectory("graft_anear_tgt").toString + "/t"
+    val ck = Files.createTempDirectory("graft_anear_ck").toString
+    // two files → two microbatches (maxFilesPerTrigger=1); mtime order
+    Seq((Option(1L), base)).toDF("id", "sig")
+      .coalesce(1).write.mode("append").parquet(in)
+    Thread.sleep(1100) // file-source ordering is mtime-second-granular
+    // the null-id row carries a perfectly good far signature — it must
+    // STILL be rejected (fail closed): a null id cannot ride the
+    // id-keyed admission anti-join
+    Seq((Option(2L), near), (Option(3L), "not-a-sig"), (Option(4L), far),
+      (None: Option[Long], "10" * 32))
+      .toDF("id", "sig").coalesce(1).write.mode("append").parquet(in)
+    val hist = Seq.empty[Tuple1[String]].toDF("sig")
+    val src = spark.readStream
+      .schema(Seq((Option(1L), "x")).toDF("id", "sig").schema)
+      .option("maxFilesPerTrigger", "1").parquet(in)
+    val q = StreamingJobs.admitNearSink(src, hist, target, ck, "id", "sig")
+    q.awaitTermination(); q.stop()
+    // the near check probes the static history only, so batch 2's near
+    // twin of batch 1 admits (the history-refresh cycle absorbs it); the
+    // malformed sig and the null id are rejected; the far sig admits
+    assert(spark.read.parquet(target).collect().map(_.getAs[String]("sig")).toSet ==
+      Set(base, near, far))
   }
 
   test("upsertSink: streaming MERGE — updates overwrite, replays are noops, last-in-batch wins") {
