@@ -2221,15 +2221,10 @@ object Queries {
       s"WITH p AS ($ptsSql), c AS ($cellsSql) " +
         "SELECT p.c_custkey, p.lon, p.lat, c.n_name FROM p LEFT JOIN c " +
         "ON p.lon > c.min_lon AND p.lon < c.max_lon AND p.lat > c.min_lat AND p.lat < c.max_lat"),
-      (s, d) => {
-        val c = cells(s, d).withColumn("geom", rectGeom)
-        points(s, d).join(broadcast(c),
-          col("lon") > col("min_lon") && col("lon") < col("max_lon") &&
-            col("lat") > col("min_lat") && col("lat") < col("max_lat") &&
-            GeoFunctions.pointInMultiPolygon(col("lon"), col("lat"), col("geom")),
-          "left")
-          .select("c_custkey", "lon", "lat", "n_name")
-      }),
+      // the engine's own PIP join (inclusive bbox); the .x5-offset points
+      // never touch a cell border, so the oracle's strict bbox agrees
+      (s, d) => Enrich.pipJoin(points(s, d), cells(s, d).withColumn("geom", rectGeom))
+        .select("c_custkey", "lon", "lat", "n_name")),
 
     QueryDef("j3_knn_join", Some(
       s"WITH p AS ($ptsSql), c AS ($cellsSql), " +
@@ -7264,7 +7259,8 @@ object Queries {
 
     // Event-time sessionization via the session_window built-in — the same
     // aggregation runs streaming (watermark + append, StreamingSpec) and
-    // batch; this entry is the batch form, oracled as gaps-and-islands SQL.
+    // batch; this entry runs StreamingJobs.sessionWindows in batch (its
+    // watermark is a no-op there), oracled as gaps-and-islands SQL.
     // Both sides work in integer microseconds (Spark's reader truncates the
     // parquet nanos, epoch_ns//1000 reproduces it), so boundary semantics
     // are exact: only a gap STRICTLY over 8h starts a new session (an event
@@ -7279,12 +7275,10 @@ object Queries {
         "SELECT user_id, min(us) AS session_start_us, max(us) + 28800000000 AS session_end_us, " +
         "count(*) AS n_events, round(sum(value), 4) AS total_value " +
         "FROM s GROUP BY user_id, sid ORDER BY user_id, session_start_us"),
-      (s, d) => T(s, d, "events")
-        .groupBy(col("user_id"), session_window(col("ts"), "8 hours").as("sw"))
-        .agg(count(lit(1)).as("n_events"), round(sum("value"), 4).as("total_value"))
+      (s, d) => graft.streaming.StreamingJobs.sessionWindows(T(s, d, "events"))
         .select(col("user_id"),
-          unix_micros(col("sw.start")).as("session_start_us"),
-          unix_micros(col("sw.end")).as("session_end_us"),
+          unix_micros(col("session_start")).as("session_start_us"),
+          unix_micros(col("session_end")).as("session_end_us"),
           col("n_events"), col("total_value"))
         .orderBy("user_id", "session_start_us")),
 

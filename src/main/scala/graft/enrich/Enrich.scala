@@ -12,91 +12,80 @@ import graft.functions.GeoFunctions
   *
   * Scale design: every dimension (≤5 570 municipalities) broadcasts; the
   * join predicate leads with *plain column* bbox comparisons so Catalyst
-  * evaluates them before the opaque PIP UDF — the Spark analog of the
+  * evaluates them before the opaque PIP kernel — the Spark analog of the
   * reference's `s.geom && b.geom AND st_intersects(...)` GiST prefilter.
-  * The fact side never shuffles for the join itself; only window argmin
-  * steps repartition, and those run on the (small) matched subset.
+  * The fact side never shuffles for the join itself; only the per-event
+  * keep-first window repartitions, and it runs on the day's batch only.
+  * Each polygon layer is ONE broadcast join and ONE window; this object
+  * holds the engine's only point-in-polygon joins.
   *
   * Dimension DataFrames must carry: dim_id, code/name columns, `geom`
   * (nested-array multipolygon) and min_lon/min_lat/max_lon/max_lat.
   */
 object Enrich {
 
-  private[graft] def bboxPre(lonC: Column, latC: Column): Column =
-    lonC >= col("min_lon") && lonC <= col("max_lon") &&
-      latC >= col("min_lat") && latC <= col("max_lat")
+  /** The municipality fallback's cutoff: the nearest municipality is taken
+    * only within this boundary distance (20_enrich_municipio.sql:74). */
+  private val KnnMaxMeters = 2000.0
 
-  private[graft] def pip(lonC: Column, latC: Column): Column =
-    GeoFunctions.pointInMultiPolygon(lonC, latC, col("geom"))
+  private val GeomCols = Seq("geom", "min_lon", "min_lat", "max_lon", "max_lat")
 
-  /** J2+J3 — municipality enrichment: exact PIP first; for the remainder,
-    * nearest municipality within `knnMaxMeters` (geography distance to the
-    * polygon boundary), matching 20_enrich_municipio.sql:43-74.
+  /** The point lies in the dim row's bbox grown by `padDeg` degrees. */
+  private def inBbox(padDeg: Double = 0.0): Column =
+    col("lon") >= col("min_lon") - padDeg && col("lon") <= col("max_lon") + padDeg &&
+      col("lat") >= col("min_lat") - padDeg && col("lat") <= col("max_lat") + padDeg
+
+  private def pip: Column = GeoFunctions.pointInMultiPolygon(col("lon"), col("lat"), col("geom"))
+
+  /** The one PIP join: every fact left-joined to each broadcast dim row
+    * whose bbox and polygon contain it, the dim's geometry columns dropped.
+    * A fact inside several polygons appears once per polygon; one inside
+    * none appears once with null dim columns. */
+  private[graft] def pipJoin(facts: DataFrame, dim: DataFrame): DataFrame =
+    facts.join(broadcast(dim), inBbox() && pip, "left").drop(GeomCols: _*)
+
+  /** One row per `event_hash`: the first in `order`. */
+  private def firstPerEvent(df: DataFrame, order: Column*): DataFrame =
+    df.withColumn("__rn", row_number().over(Window.partitionBy("event_hash").orderBy(order: _*)))
+      .filter(col("__rn") === 1).drop("__rn")
+
+  /** J2+J3 — municipality enrichment: the lowest code among the
+    * municipalities containing the point; else the nearest within
+    * `KnnMaxMeters` (geography distance to the polygon boundary, lowest
+    * code on ties); else null — 20_enrich_municipio.sql:43-74.
     *
-    * Shape: ONE linear pipeline — PIP left-join → per-event argmin window
-    * → KNN left-join (candidates attach only to still-unmatched rows via
-    * the join predicate itself) → per-event argmin window → accept-or-null.
-    * The earlier matched/unmatched branch-and-union form re-executed the
-    * PIP join once per branch and re-built the whole KNN candidate subtree
-    * a second time inside a broadcast anti-join (Spark does not
-    * materialize shared subtrees) — at 100 TB that is the expensive
-    * point-in-polygon kernel run TWICE over the day's facts. The linear
-    * form evaluates PIP once and the distance kernel once, and both
-    * windows key on `event_hash`, so the broadcast joins preserve the
-    * first window's partitioning and the whole chain costs ONE shuffle —
-    * of the day's batch only (enrichment is per-day incremental), never
-    * history.
+    * The reference's two statements (exact UPDATE, then KNN for the rest)
+    * are ONE ranked join here: each fact left-joins every municipality
+    * whose bbox, padded by ~2 km, holds it; a candidate is a `hit` when the
+    * unpadded bbox and the polygon contain the point, and only non-hits pay
+    * the distance kernel. One window keeps, per event, the first of
+    * `hit desc, distance asc nulls last, code asc nulls last` — a null
+    * distance (null geometry) never shadows a real candidate — and the
+    * municipality columns survive only for a hit or a distance within the
+    * cutoff. So the day's facts cross the municipality dim once and shuffle
+    * once, and exactly one row per fact comes out (Pipeline.checkDay's
+    * curated == enriched invariant).
     *
     * @param facts must carry `event_hash`, `lon`, `lat`
     * @param municipios dim with cd_mun, nm_mun, uf, area_km2 + geom/bbox
     */
-  def enrichMunicipio(facts: DataFrame, municipios: DataFrame,
-                      knnMaxMeters: Double = 2000.0): DataFrame = {
+  def enrichMunicipio(facts: DataFrame, municipios: DataFrame): DataFrame = {
+    val munCols = Seq("mun_cd_mun", "mun_nm_mun", "mun_uf", "mun_area_km2")
     val dim = municipios.select(
-      col("cd_mun").as("mun_cd_mun"), col("nm_mun").as("mun_nm_mun"),
-      col("uf").as("mun_uf"), col("area_km2").as("mun_area_km2"),
-      col("geom"), col("min_lon"), col("min_lat"), col("max_lon"), col("max_lat"))
-
-    // exactly one assignment per event even when a boundary point falls in
-    // two overlapping municipality polygons — mirrors the reference UPDATE
-    // (one row per fact, lowest code wins), and keeps Pipeline.checkDay's
-    // curated==enriched conservation invariant intact.
-    val exact = facts.join(broadcast(dim),
-        bboxPre(col("lon"), col("lat")) && pip(col("lon"), col("lat")), "left")
-      .drop("geom", "min_lon", "min_lat", "max_lon", "max_lat")
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("event_hash").orderBy(col("mun_cd_mun").asc_nulls_last)))
-      .filter(col("__rn") === 1).drop("__rn")
-
-    // KNN fallback: candidate municipalities whose bbox expanded by ~2 km
-    // contains the point; argmin by boundary distance; accept ≤ cutoff.
-    // `mun_cd_mun IS NULL` inside the join predicate keeps exact-matched
-    // rows candidate-free (they ride through the left join as one row).
-    val padDeg = knnMaxMeters / 111000.0 * 1.5
-    val knnDim = municipios.select(
-      col("cd_mun").as("knn_cd_mun"), col("nm_mun").as("knn_nm_mun"),
-      col("uf").as("knn_uf"), col("area_km2").as("knn_area_km2"),
-      col("geom"), col("min_lon"), col("min_lat"), col("max_lon"), col("max_lat"))
-    val accept = col("dist_m") <= knnMaxMeters // null dist (no candidate) → false
-    exact.join(broadcast(knnDim),
-        col("mun_cd_mun").isNull &&
-          col("lon") >= col("min_lon") - padDeg && col("lon") <= col("max_lon") + padDeg &&
-          col("lat") >= col("min_lat") - padDeg && col("lat") <= col("max_lat") + padDeg,
-        "left")
-      .withColumn("dist_m", GeoFunctions.distanceToMultiPolygonMeters(
-        col("lon"), col("lat"), col("geom")))
-      .withColumn("__rn", row_number().over(
-        // nulls LAST: a null-distance candidate (null geom, populated bbox)
-        // must not take rank 1 and shadow a real candidate within the cutoff
-        Window.partitionBy("event_hash")
-          .orderBy(col("dist_m").asc_nulls_last, col("knn_cd_mun").asc_nulls_last)))
-      .filter(col("__rn") === 1)
-      .withColumn("mun_cd_mun", coalesce(col("mun_cd_mun"), when(accept, col("knn_cd_mun"))))
-      .withColumn("mun_nm_mun", coalesce(col("mun_nm_mun"), when(accept, col("knn_nm_mun"))))
-      .withColumn("mun_uf", coalesce(col("mun_uf"), when(accept, col("knn_uf"))))
-      .withColumn("mun_area_km2", coalesce(col("mun_area_km2"), when(accept, col("knn_area_km2"))))
-      .drop("__rn", "dist_m", "knn_cd_mun", "knn_nm_mun", "knn_uf", "knn_area_km2",
-        "geom", "min_lon", "min_lat", "max_lon", "max_lat")
+      (Seq("cd_mun", "nm_mun", "uf", "area_km2").zip(munCols).map { case (c, m) => col(c).as(m) } ++
+        GeomCols.map(col)): _*)
+    val padDeg = KnnMaxMeters / 111000.0 * 1.5
+    val hit = coalesce(inBbox() && pip, lit(false))
+    val candidates = facts.join(broadcast(dim), inBbox(padDeg), "left")
+      .withColumn("__hit", hit)
+      .withColumn("__dist", when(!col("__hit"),
+        GeoFunctions.distanceToMultiPolygonMeters(col("lon"), col("lat"), col("geom"))))
+      .drop(GeomCols: _*)
+    val keep = col("__hit") || col("__dist") <= KnnMaxMeters // null distance → null → dropped
+    firstPerEvent(candidates,
+        col("__hit").desc, col("__dist").asc_nulls_last, col("mun_cd_mun").asc_nulls_last)
+      .withColumns(munCols.map(c => c -> when(keep, col(c))).toMap)
+      .drop("__hit", "__dist")
   }
 
   /** J4/W6 — generic first-match PIP enrichment (biome / UC / TI):
@@ -118,22 +107,15 @@ object Enrich {
       if (orderCol == "dim_id" || outCols.contains(orderCol)) Seq.empty[String]
       else Seq(orderCol)
     val dimSel = dim.select(
-      (col("dim_id") +: (outCols.keys.toSeq ++ extraOrder).map(col) :+
-        col("geom") :+ col("min_lon") :+ col("min_lat") :+
-        col("max_lon") :+ col("max_lat")): _*)
+      (col("dim_id") +: (outCols.keys.toSeq ++ extraOrder ++ GeomCols).map(col)): _*)
 
-    val joined = facts.join(broadcast(dimSel),
-        bboxPre(col("lon"), col("lat")) && pip(col("lon"), col("lat")), "left")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("event_hash").orderBy(col(orderCol).asc_nulls_last)))
-      .filter(col("rn") === 1)
-
-    val renamed = outCols.foldLeft(joined) { case (df, (dimCol, outCol)) =>
+    val first = firstPerEvent(pipJoin(facts, dimSel), col(orderCol).asc_nulls_last)
+    val renamed = outCols.foldLeft(first) { case (df, (dimCol, outCol)) =>
       df.withColumn(outCol, col(dimCol))
     }
     renamed
       .withColumn(checkedFlag, lit(true))
-      .drop("rn", "dim_id", "geom", "min_lon", "min_lat", "max_lon", "max_lat")
+      .drop("dim_id")
       .drop(extraOrder: _*)
       .drop(outCols.keys.toSeq.filterNot(k => outCols(k) == k): _*)
   }

@@ -643,24 +643,10 @@ object Dedup {
     // override is ignored (default kept) rather than thrown.
     val localThreshold = sess.conf.getOption("spark.graft.cc.localEdgeThreshold")
       .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(2000000L)
-    // The budget is ALSO expressible in BYTES (`spark.graft.cc.
-    // localEdgeBytes`): the edge-count default is a proxy for driver
-    // pressure, and a byte budget keeps the bound meaningful if the
-    // collected footprint model ever widens. Per collected edge =
-    // 2 longs = 16 B by construction (the integral-id guard + cast above),
-    // so bytes convert exactly; when BOTH confs are set the TIGHTER cap
-    // wins. The byte cap applies only when EXPLICITLY configured — a
-    // default byte ceiling would silently override a user's explicit
-    // localEdgeThreshold above 2M edges, changing an existing knob's
-    // meaning out from under them.
-    val effThreshold = sess.conf.getOption("spark.graft.cc.localEdgeBytes")
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .map(bytes => math.min(localThreshold, bytes / 16L))
-      .getOrElse(localThreshold)
     val pairsCached =
       pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    if (idIsIntegral && pairsCached && effThreshold > 0 &&
-        p0.count() <= effThreshold) {
+    if (idIsIntegral && pairsCached && localThreshold > 0 &&
+        p0.count() <= localThreshold) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x

@@ -240,9 +240,6 @@ final class Pipeline(spark: SparkSession, root: String,
 
     // L: idempotent append against the same file_date partition only
     val existing = readOrEmpty(s"curated/file_date=$fileDate", records.drop("file_date"))
-    val existingHashes =
-      if (existing.columns.contains("event_hash")) existing
-      else records.limit(0)
     val obsInserted = org.apache.spark.sql.Observation()
     // persisted (O(batch), one day's inserts): the anti-joined frame feeds
     // BOTH the curated append and the curatedDay union below — without the
@@ -252,7 +249,7 @@ final class Pipeline(spark: SparkSession, root: String,
     // where the write's QueryExecution cannot surface the metric (measured:
     // obs.get then throws key-not-found on any run whose anti-join survives
     // optimization).
-    val fresh = Ingest.idempotentAppend(records, existingHashes)
+    val fresh = Ingest.idempotentAppend(records, existing)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // try/finally: a failing write below must still release the two cached
     // frames — a long backfill on a shared session would otherwise
@@ -283,12 +280,9 @@ final class Pipeline(spark: SparkSession, root: String,
       // (its event_hash is already in `already`) — PipelineSpec pins both
       // directions ("curatedDay union view…", "crash heal, enriched
       // ahead…"). Column order matches the old read-back: data columns
-      // first, partition column appended last. The file_date guard is
-      // vacuous on the partition dir but pins the read-back's exact filter
-      // semantics for `fresh`.
+      // first, partition column appended last.
       val curatedDay = {
-        val ex = if (existing.columns.contains("file_date")) existing
-                 else existing.withColumn("file_date", lit(d))
+        val ex = existing.withColumn("file_date", lit(d))
         // fail-loud on store drift, with the drifted columns NAMED: an older
         // curated partition carrying a data column the current transform no
         // longer produces is a store-vs-code drift an operator must
@@ -301,14 +295,10 @@ final class Pipeline(spark: SparkSession, root: String,
             "produces — store schema drift, not a code bug; re-baseline the " +
             "store or restore the column(s) in Ingest.transform")
         ex.unionByName(fresh.select(ex.columns.map(col): _*))
-          .filter(col("file_date") === lit(d))
       }
-      val already = readOrEmpty("enriched", curatedDay)
-      val newRows =
-        if (already.columns.contains("event_hash"))
-          Ingest.idempotentAppend(curatedDay, already.filter(col("file_date") === lit(d)))
-        else curatedDay
-      val enriched = enrichDims(Enrich.enrichMunicipio(newRows, municipios))
+      val already = readOrEmpty("enriched", curatedDay).filter(col("file_date") === lit(d))
+      val enriched = enrichDims(Enrich.enrichMunicipio(
+        Ingest.idempotentAppend(curatedDay, already), municipios))
       Pipeline.inParallel(Seq(
         () => {
           fresh.observe(obsInserted, count(lit(1)).as("n"))

@@ -433,32 +433,32 @@ object StreamingJobs {
       }
       .trigger(trigger).start()
 
-  /** Stream-static spatial enrichment: streaming point events joined to a
-    * broadcast polygon dimension with the batch path's exact plan shape —
-    * cheap bbox column conjuncts evaluated before the codegen PIP predicate
-    * (graft.enrich.Enrich). Stream-static joins need no state for the
-    * static side; the one-row-per-event guarantee (window-based in batch,
-    * unsupported on streams) is provided by watermark-bounded dedup on
-    * event_hash, which also absorbs source replays.
+  /** Stream-static spatial enrichment: streaming point events through the
+    * batch path's own PIP join (`Enrich.pipJoin`: broadcast dim, cheap
+    * bbox column conjuncts before the codegen PIP predicate). Stream-static
+    * joins need no state for the static side; the one-row-per-event
+    * guarantee (window-based in batch, unsupported on streams) is provided
+    * by watermark-bounded dedup on event_hash, which also absorbs source
+    * replays.
     *
-    * Divergence from the batch path: for a point matching SEVERAL dim
-    * polygons (a shared-border or overlapping layer), the dedup survivor is
-    * whichever joined row the engine emits first — NOT the batch path's
-    * lowest-code tiebreak. Deterministic only for non-overlapping dims
-    * (pre-validated layers, the reference's case); overlapping layers must
-    * use the batch enrichment.
+    * Two divergences from the batch path:
+    *  - for a point matching SEVERAL dim polygons (a shared-border or
+    *    overlapping layer), the dedup survivor is whichever joined row the
+    *    engine emits first — NOT the batch path's lowest-code tiebreak.
+    *    Deterministic only for non-overlapping dims (pre-validated layers,
+    *    the reference's case); overlapping layers must use the batch
+    *    enrichment;
+    *  - the stream does PIP only: a point in no polygon keeps null dim
+    *    columns, with no nearest-municipality ≤2 km fallback
+    *    (`Enrich.enrichMunicipio`).
     *
     * @param points streaming frame with `event_hash`, `ts`, `lon`, `lat`
     * @param dim    static dim with label columns + `geom` + bbox columns
     */
   def enrichPoints(points: DataFrame, dim: DataFrame,
-                   watermark: String = "1 day"): DataFrame = {
-    val (lon, lat) = (col("lon"), col("lat"))
-    points.withWatermark("ts", watermark)
-      .join(broadcast(dim), Enrich.bboxPre(lon, lat) && Enrich.pip(lon, lat), "left")
-      .drop("geom", "min_lon", "min_lat", "max_lon", "max_lat")
+                   watermark: String = "1 day"): DataFrame =
+    Enrich.pipJoin(points.withWatermark("ts", watermark), dim)
       .dropDuplicatesWithinWatermark("event_hash")
-  }
 
   /** Stream-stream event-time interval join — the attribution shape (a
     * `right` event credited to every `left` event of the same key it
@@ -501,8 +501,8 @@ object StreamingJobs {
     * exactly last_ts+gap still merges — pinned by StreamingSpec); it
     * closes (and, in streaming append mode, emits exactly once) when the
     * watermark passes last_ts + gap — state is watermark-bounded, unlike
-    * [[sessionize]]'s processing-time timeout. The identical aggregation
-    * runs in batch as the `stream_sessionize` oracle query.
+    * [[sessionize]]'s processing-time timeout. The `stream_sessionize`
+    * oracle row runs this function in batch.
     */
   def sessionWindows(events: DataFrame, gap: String = "8 hours",
                      watermark: String = "1 hour"): DataFrame =

@@ -14,7 +14,7 @@ class KnobInventorySpec extends AnyFunSuite {
     "SPARK_GRAFT_EXPLAIN", "SPARK_GRAFT_FS_SETTLE", "SPARK_GRAFT_ONLY",
     "SPARK_GRAFT_REPEAT", "SPARK_GRAFT_SCALE", "SPARK_GRAFT_SF_DIR")
   private val ConfKeys = Set(
-    "spark.graft.cc.localEdgeBytes", "spark.graft.cc.localEdgeThreshold",
+    "spark.graft.cc.localEdgeThreshold",
     "spark.graft.fanOutInputs", "spark.graft.keyIndex.compactAt",
     "spark.graft.keyIndex.minTargetBytes",
     "spark.graft.scratchRoot", "spark.graft.streamDrainPartitions")

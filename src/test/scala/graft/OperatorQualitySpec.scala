@@ -2482,31 +2482,6 @@ class OperatorQualitySpec extends AnyFunSuite {
     pairs.unpersist()
   }
 
-  test("connectedComponents: localEdgeBytes is honored at the boundary " +
-    "(16 B/edge model) and the tighter of the two caps wins") {
-    import spark.implicits._
-    val nodes = (1L to 10L).toDF("id")
-    val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 7L), (8L, 9L)) // 5 edges
-    val pairs = edges.toDF("a", "b").persist()
-    def run(bytes: Long): (Map[Long, Long], Int) = {
-      spark.conf.set("spark.graft.cc.localEdgeBytes", bytes.toString)
-      try {
-        val m = Dedup.connectedComponents(nodes, "id", pairs, "a", "b")
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        (m, Dedup.lastCcRounds.get)
-      } finally spark.conf.unset("spark.graft.cc.localEdgeBytes")
-    }
-    // budget exactly 5 edges × 16 B → fast path (rounds == 0)
-    val (atBudget, rFast) = run(5L * 16L)
-    assert(rFast == 0, s"expected driver fast path at the byte budget, rounds=$rFast")
-    // one byte less → edge cap rounds down to 4 < 5 → distributed loop
-    val (belowBudget, rLoop) = run(5L * 16L - 1L)
-    assert(rLoop > 0, "expected the iterative loop just under the byte budget")
-    assert(atBudget == belowBudget, "paths diverged at the byte boundary")
-    assert(atBudget(3L) == 1L && atBudget(5L) == 4L && atBudget(10L) == 10L)
-    pairs.unpersist()
-  }
-
   test("connectedComponents: non-numeric localEdgeThreshold falls back to " +
     "the default instead of throwing") {
     import spark.implicits._

@@ -141,6 +141,26 @@ class PipelineSpec extends AnyFunSuite {
     assert(Enrich.enrichMunicipio(facts, municipios).count() == 3)
   }
 
+  test("enriched store schema: names, types and order are pinned, with and " +
+    "without the UC/TI dims") {
+    val enrichedSchema = "event_hash:string,lat:double,lon:double,view_ts:string," +
+      "satelite:string,municipio:string,uf:string,bioma:string,props:string," +
+      "mun_cd_mun:string,mun_nm_mun:string,mun_uf:string,mun_area_km2:double," +
+      "cd_bioma:string,bioma_checked:boolean,cd_cnuc:string,uc_nome:string," +
+      "uc_checked:boolean,terrai_cod:string,ti_nome:string,ti_checked:boolean,file_date:date"
+    def stored(root: String): String = spark.read.parquet(s"$root/enriched").schema.fields
+      .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
+    val dir = Files.createTempDirectory("graft_enriched_schema")
+    val full = dir.resolve("full").toString
+    new Pipeline(spark, full, municipios, biomas, Some(ucs), Some(tis))
+      .backfill(d1, d3, d => Ingest.readCsv(spark, writeDailyCsv(dir, d)))
+    assert(stored(full) == enrichedSchema)
+    val noUcTi = dir.resolve("no_uc_ti").toString
+    new Pipeline(spark, noUcTi, municipios, biomas)
+      .runDayFrom(Ingest.readCsv(spark, writeDailyCsv(dir, d1)), d1, Set.empty)
+    assert(stored(noUcTi) == enrichedSchema)
+  }
+
   test("schema cache: a write that changes the store schema invalidates the " +
     "cached entry; an unchanged-schema write keeps it") {
     import spark.implicits._

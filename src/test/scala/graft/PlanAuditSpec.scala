@@ -63,6 +63,23 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("min_lon"), "bbox prefilter columns missing from join condition")
   }
 
+  test("enrichMunicipio: one broadcast nested-loop join and one window — the " +
+    "exact match and the 2 km fallback are one ranked join") {
+    import spark.implicits._
+    def rect(x0: Double, x1: Double) =
+      Seq(Seq(Seq(Seq(x0, 0.0), Seq(x1, 0.0), Seq(x1, 10.0), Seq(x0, 10.0), Seq(x0, 0.0))))
+    val muns = Seq(("1100015", "Alpha", "RO", 5000.0, rect(0, 10), 0.0, 0.0, 10.0, 10.0),
+        ("1100023", "Beta", "AC", 7000.0, rect(10.5, 20), 10.5, 0.0, 20.0, 10.0))
+      .toDF("cd_mun", "nm_mun", "uf", "area_km2", "geom", "min_lon", "min_lat", "max_lon", "max_lat")
+    val facts = Seq(("h1", 5.0, 5.0), ("h2", 10.49, 5.0), ("h3", 10.25, 5.0))
+      .toDF("event_hash", "lon", "lat")
+    val df = graft.enrich.Enrich.enrichMunicipio(facts, muns)
+    df.queryExecution.toRdd.count()
+    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    assert("BroadcastNestedLoopJoin".r.findAllIn(p).size == 1, p)
+    assert("""\bWindow\b""".r.findAllIn(p).size == 1, p)
+  }
+
   test("j6_dim_rollup: both dimensions broadcast — fact side never shuffles for the join") {
     val p = plan("j6_dim_rollup")
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 2, p)

@@ -173,27 +173,27 @@ class ScaleProbeSpec extends AnyFunSuite {
     val nodes = ((100L to 163L) ++ (500L to 505L) ++ (600L to 602L) ++
       Seq(900L, 901L)).toDF("id")                            // + singletons
     val pairs = edges.toDF("a", "b").persist()
-    def run(bytes: Long): (Map[Long, Long], Int) = {
-      spark.conf.set("spark.graft.cc.localEdgeBytes", bytes.toString)
+    def run(threshold: Long): (Map[Long, Long], Int) = {
+      spark.conf.set("spark.graft.cc.localEdgeThreshold", threshold.toString)
       try {
         val m = Dedup.connectedComponents(nodes, "id", pairs, "a", "b")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         (m, Dedup.lastCcRounds.get)
       } finally {
-        spark.conf.unset("spark.graft.cc.localEdgeBytes")
+        spark.conf.unset("spark.graft.cc.localEdgeThreshold")
         CacheRegistry.unpersistAll(spark, blocking = true); ()
       }
     }
-    val budget = edges.size.toLong * 16L  // exact 16 B/edge model
+    val budget = edges.size.toLong                   // 68 edges
     val (fastLabels, fastRounds) = run(budget)       // at budget → driver
-    val (loopLabels, loopRounds) = run(budget - 1L)  // one byte under → loop
-    assert(fastRounds == 0, s"expected driver fast path at the byte budget, " +
+    val (loopLabels, loopRounds) = run(budget - 1L)  // one edge under → loop
+    assert(fastRounds == 0, s"expected driver fast path at the edge budget, " +
       s"rounds=$fastRounds")
     assert(loopRounds >= 2,
       s"loop converged in $loopRounds round(s) on a 63-edge chain — the " +
         "graph no longer exercises the multi-round two-hop structure")
     assert(fastLabels == loopLabels,
-      "driver union-find and the two-hop loop diverged at the byte budget " +
+      "driver union-find and the two-hop loop diverged at the edge budget " +
         s"edge (rounds=$loopRounds)")
     assert(fastLabels(163L) == 100L && fastLabels(505L) == 504L &&
       fastLabels(602L) == 600L && fastLabels(900L) == 900L)
