@@ -12,10 +12,11 @@ object SparkEntry {
   /** `spark.sql.codegen.cache.maxEntries` for the engine's own mains
     * (Bench, Verify, ScaleProbe, ScaleGen). A static conf, so it goes on
     * the session builder. Spark's default of 100 generated classes is
-    * smaller than one pipeline day's working set (~117 distinct classes
-    * with the one-pass mart rebuild), so the cache evicts classes it is
-    * about to need. Host sessions the engine runs inside, such as
-    * perfbench's, keep Spark's default of 100 and pay those recompiles. */
+    * smaller than one pipeline day's working set, so the cache evicts
+    * classes it is about to need. Host sessions the engine runs inside,
+    * such as perfbench's, keep Spark's default of 100 and pay those
+    * recompiles: a traced perfbench `daily_refetch` still compiles 81–97
+    * classes per op (the `-t1-` runs in `bench/one_enrich_join/change`). */
   val CodegenCacheMaxEntries = 5000
 
   /** Session settings every entry point needs: ANSI off (the reference's

@@ -114,13 +114,13 @@ object StreamingJobs {
     * append-only shapes (monotonic ids, time-partitioned days) the
     * per-batch probe cost is therefore batch-envelope-sized, not
     * O(target). Hash keys (the reference's K1 `event_hash` md5) have no
-    * useful envelope — for them the [[KeyIndex]] sidecar bounds the probe
-    * instead: a bucket-pruned read of a compacted key index that is a pure
-    * CACHE of the target (derivable, never authoritative), so there is no
-    * atomic-two-write seam — a crash between target append and index
-    * refresh just leaves the new files "uncovered" and the next batch's
-    * probe scans that batch-sized delta while the index heals forward.
-    * No state store — the TABLE is the state; the index is a cache of it.
+    * useful envelope: a digest batch's [min, max] spans nearly the whole
+    * key space, so for them the probe reads the target's key column on
+    * every batch. No key index sits in front of that read. A bucketed
+    * index only prunes while a batch touches few of its buckets, and
+    * random keys fill 75 % of 1,024 buckets from about 1,420 keys per
+    * batch (1 − (1 − 1/1024)^B ≥ 0.75), below one day's 1–3k events.
+    * No state store — the TABLE is the state.
     *
     * @param trigger AvailableNow by default (drain-and-stop, the backfill
     *                shape); pass a processing-time trigger for a live
@@ -159,57 +159,22 @@ object StreamingJobs {
 
   /** The append-if-absent step both idempotent sinks end with: append the
     * `rows` whose `keyCols` the target at `targetPath` does not already
-    * hold, matched NULL-SAFELY, then bring the [[KeyIndex]] sidecar up to
-    * date. `rows` must already be unique on `keyCols`. */
+    * hold, matched NULL-SAFELY. `rows` must already be unique on `keyCols`. */
   private def appendAbsent(rows: DataFrame, targetPath: String,
                            keyCols: Seq[String], partitionCols: Seq[String]): Unit = {
     val spark = rows.sparkSession
-    // Hadoop FS listing, not java.io.File — the target is HDFS/S3 in
-    // production, where a local-FS probe would always be false and every
-    // replayed batch would append duplicates. "Exists" means HAS DATA
-    // FILES: external retention can empty the directory while leaving
-    // `_keyidx`/`_SUCCESS` behind, and reading such a dir throws
-    // schema-inference AnalysisException on every restart — a zero-data
-    // target must take the fresh-target path instead. ONE recursive
-    // listing per batch, shared with the probe below (no write happens in
-    // between); refresh re-lists by contract — it must see the files the
-    // append just wrote.
-    val p = new Path(targetPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataFiles = KeyIndex.listDataFiles(fs, p)
-    // The sidecar is bypassed when a key column is ALSO a partition column
-    // (ADVICE r17): partition values round-trip target reads through
-    // partition-value INFERENCE, so the delta read's key types (and worse,
-    // its VALUES — "007" infers as int 7 and no cast restores the string)
-    // need not match what the batch writes; the index would be invalidated
-    // by every probe and rebuilt by every refresh. That shape takes a
-    // SCHEMA-TYPED envelope read instead: with the batch schema, partition
-    // directory names parse AS the batch's type, and a range predicate on
-    // a partition key PARTITION-PRUNES the target scan — the right plan
-    // anyway, while the index exists for hash keys, which are never
-    // partition keys. A sidecar a PRE-bypass version left behind would
-    // otherwise sit stale in the table forever (nothing probes or
-    // refreshes it under the bypass) — it is a pure cache, so it is
-    // deleted on sight.
-    val keyedByPartition = keyCols.intersect(partitionCols).nonEmpty
-    if (keyedByPartition) {
-      val idx = new Path(p, KeyIndex.DirName)
-      if (fs.exists(idx)) { fs.delete(idx, true); () }
-    }
-    // Persisted: `rows` feeds the key-envelope aggregate, the probe's
-    // bucket set and the anti-join — without it the caller's dedup (and
-    // admission) plan runs once per consumer.
+    // Persisted: `rows` feeds the key-envelope aggregate and the anti-join —
+    // without it the caller's dedup (and admission) plan runs once per
+    // consumer.
     val once = rows.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val (existing, prior) =
-        if (dataFiles.isEmpty) (None, None)
-        else if (keyedByPartition)
-          (Some(prunedTargetKeys(spark, targetPath, keyCols, once, Some(once.schema))), None)
-        else {
-          val pr = KeyIndex.probe(spark, targetPath, keyCols, once,
-            listing = Some(dataFiles))
-          (Some(pr.frame), pr.manifest)
-        }
+      // A key column that is ALSO a partition column is read with the batch
+      // schema: partition values otherwise round-trip through value
+      // inference, which re-types "007" as int 7 and loses the string.
+      val existing =
+        if (!hasDataFiles(spark, targetPath)) None
+        else Some(prunedTargetKeys(spark, targetPath, keyCols, once,
+          if (keyCols.exists(partitionCols.contains)) Some(once.schema) else None))
       // null-safe equality (<=>): a null-keyed row already in the target
       // must block its replayed twin
       val fresh = existing.fold(once)(ex =>
@@ -217,15 +182,24 @@ object StreamingJobs {
       val writer = fresh.write.mode("append")
       (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
        else writer).parquet(targetPath)
-      // AFTER the target append (ordering is the crash-safety): index the
-      // files the manifest doesn't cover — normally just the ones this
-      // batch wrote, after a crash also the orphaned delta. The batch's key
-      // types ride along so refresh can refuse to build an index the probe
-      // side would never validate.
-      if (!keyedByPartition)
-        KeyIndex.refresh(spark, targetPath, keyCols, prior,
-          Some(KeyIndex.typesOf(once, keyCols)))
     } finally { once.unpersist(); () }
+  }
+
+  /** Whether `targetPath` holds a data file, by Hadoop FS listing (the
+    * target is HDFS/S3 in production, where a java.io.File probe is always
+    * false). Names starting with `_` or `.` are skipped at every level, as
+    * Spark's own listing skips them (`_SUCCESS`, `_temporary`, checksum
+    * files): a directory that external retention emptied down to such
+    * files must take the fresh-target path, because reading it throws a
+    * schema-inference error on every batch. */
+  private def hasDataFiles(spark: SparkSession, targetPath: String): Boolean = {
+    val root = new Path(targetPath)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(p: Path): Boolean = fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".") && (!st.isDirectory || walk(st.getPath))
+    }
+    fs.exists(root) && walk(root)
   }
 
   /** The target-side probe frame for [[appendAbsent]]'s anti-join:
@@ -254,14 +228,13 @@ object StreamingJobs {
       .parquet(targetPath).select(keyCols.map(col): _*)
       .filter(envelopeFilter(once, keyCols))
 
-  /** The batch key-envelope predicate, applicable to ANY frame carrying
-    * `keyCols` (the target scan, the key index, an uncovered-file scan).
-    * One batch-sized aggregate collected as ONE driver row. Non-atomic
+  /** The batch key-envelope predicate on `keyCols`: one batch-sized
+    * aggregate collected as ONE driver row. Non-atomic
     * key types (struct/array/map) get no range term — min()/max() on
     * them fails at analysis time — only the null arm; a batch that is
     * empty returns lit(false) (probe nothing) via an explicit count, not
     * the all-null inference (which a complex-only key set would fake). */
-  private[graft] def envelopeFilter(once: DataFrame, keyCols: Seq[String]): Column = {
+  private def envelopeFilter(once: DataFrame, keyCols: Seq[String]): Column = {
     val schema = once.schema
     // range-capable = non-complex: min/max on struct/array may analyze,
     // but lit(collected Row/array) cannot round-trip the value back into
@@ -334,11 +307,11 @@ object StreamingJobs {
     * foreachBatch is the seam: the banded join + existence aggregate is
     * a batch shape the streaming planner cannot express as a stateful
     * transform. Scale: the history side is the persisted chunk index;
-    * candidates ∝ colliding 16-bit buckets, never |batch|×|history| —
-    * and the per-batch TARGET read goes through the [[KeyIndex]] sidecar
-    * (signatures are hash-like bitstrings, whose batch envelope cannot
-    * prune), so it never grows into an O(target) data-file scan per
-    * microbatch. */
+    * candidates ∝ colliding 16-bit buckets, never |batch|×|history|. The
+    * per-batch TARGET read is the target's signature column, on every
+    * batch: signatures are hash-like bitstrings, whose batch envelope
+    * cannot prune, and a bucketed key index would stop pruning at
+    * day-sized batches (see [[idempotentAppendSink]]). */
   def admitNearSink(stream: DataFrame, historySigs: DataFrame,
                     targetPath: String, checkpoint: String,
                     idCol: String, sigCol: String,
@@ -417,8 +390,10 @@ object StreamingJobs {
           .agg(max_by(struct(attrCols.map(col): _*),
             struct(col(orderCol) +: attrCols.map(col): _*)).as("__a"))
           .select(keyCols.map(col) ++ attrCols.map(a => col(s"__a.$a").as(a)): _*)
+        // has data files, not exists: a target holding only `_SUCCESS`
+        // cannot be read (schema inference fails) and merges as empty
         val merged =
-          if (fs.exists(target)) {
+          if (hasDataFiles(spark, targetPath)) {
             val current = spark.read.parquet(targetPath)
               .select((keyCols ++ attrCols).map(col): _*)
             graft.operators.Scd.upsert(current, latest, keyCols, attrCols)

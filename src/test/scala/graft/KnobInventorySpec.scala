@@ -15,8 +15,7 @@ class KnobInventorySpec extends AnyFunSuite {
     "SPARK_GRAFT_REPEAT", "SPARK_GRAFT_SCALE", "SPARK_GRAFT_SF_DIR")
   private val ConfKeys = Set(
     "spark.graft.cc.localEdgeThreshold",
-    "spark.graft.fanOutInputs", "spark.graft.keyIndex.compactAt",
-    "spark.graft.keyIndex.minTargetBytes",
+    "spark.graft.fanOutInputs",
     "spark.graft.scratchRoot", "spark.graft.streamDrainPartitions")
 
   private lazy val sources: Seq[(Path, String)] = {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -71,28 +72,53 @@ class StreamingSpec extends AnyFunSuite {
       s"drain dirs survived unpersistAll: ${after.map(_.getName).mkString(",")}")
   }
 
+  /** Drains `rows` through [[StreamingJobs.idempotentAppendSink]] from a
+    * fresh checkpoint: a replay whenever the rows repeat. */
+  private def drainAppend(rows: DataFrame, target: String,
+                          keyCols: Seq[String] = Seq("k"),
+                          partitionCols: Seq[String] = Nil): Unit = {
+    val in = Files.createTempDirectory("graft_sink_in").toString
+    rows.write.mode("overwrite").parquet(in)
+    val q = StreamingJobs.idempotentAppendSink(
+      spark.readStream.schema(rows.schema).parquet(in), target, keyCols,
+      Files.createTempDirectory("graft_sink_ck").toString,
+      partitionCols = partitionCols)
+    q.awaitTermination(); q.stop()
+  }
+
   test("idempotentAppendSink: replayed batches insert nothing (K1 streaming twin)") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_sink_in").toString
-    val target = Files.createTempDirectory("graft_sink_tgt").toString + "/t"
-    val ck1 = Files.createTempDirectory("graft_sink_ck1").toString
-    val ck2 = Files.createTempDirectory("graft_sink_ck2").toString
-    val batch1 = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
-    batch1.write.mode("overwrite").parquet(in)
-    def run(ck: String): Unit = {
-      val q = StreamingJobs.idempotentAppendSink(
-        spark.readStream.schema(batch1.schema).parquet(in), target, Seq("k"), ck)
-      q.awaitTermination(); q.stop()
+    // long keys, and md5 hash keys (the reference's K1 `event_hash` shape,
+    // whose batch envelope spans the whole key space)
+    val inputs = Seq[(String, DataFrame => DataFrame)](
+      "long" -> identity,
+      "md5" -> (_.withColumn("k", md5(col("k").cast("string")))))
+    for ((name, keyed) <- inputs) {
+      val target = Files.createTempDirectory("graft_sink_tgt").toString + "/t"
+      val batch1 = keyed(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"))
+      drainAppend(batch1, target)
+      assert(spark.read.parquet(target).count() == 3, name)
+      // full source replay from a FRESH checkpoint (the worst re-run case:
+      // the stream re-delivers everything) + one genuinely new row
+      val all = batch1.union(keyed(Seq((3L, "c"), (4L, "d")).toDF("k", "v")))
+      drainAppend(all, target)
+      val rows = spark.read.parquet(target).select("k").collect().map(_.get(0))
+      val want = keyed((1L to 4L).map(k => (k, "")).toDF("k", "v"))
+        .select("k").collect().map(_.get(0))
+      assert(rows.length == 4, s"$name: duplicates appended: ${rows.toSeq}")
+      assert(rows.toSet == want.toSet, name)
+      // rows that external retention removed from the target are inserted
+      // again by their replay: the probe reads the target as it is now
+      val fs = new org.apache.hadoop.fs.Path(target)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val largest = fs.listStatus(new org.apache.hadoop.fs.Path(target))
+        .filter(_.getPath.getName.startsWith("part-")).maxBy(_.getLen)
+      assert(fs.delete(largest.getPath, false))
+      assert(spark.read.parquet(target).count() < 4, name)
+      drainAppend(all, target)
+      val again = spark.read.parquet(target).select("k").collect().map(_.get(0))
+      assert(again.length == 4 && again.toSet == want.toSet, s"$name: ${again.toSeq}")
     }
-    run(ck1)
-    assert(spark.read.parquet(target).count() == 3)
-    // full source replay from a FRESH checkpoint (the worst re-run case:
-    // the stream re-delivers everything) + one genuinely new row
-    Seq((3L, "c"), (4L, "d")).toDF("k", "v").write.mode("append").parquet(in)
-    run(ck2)
-    val rows = spark.read.parquet(target).collect()
-    assert(rows.length == 4, s"duplicates appended: ${rows.toSeq}")
-    assert(rows.map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 4L))
   }
 
   test("idempotentAppendSink: null keys and in-batch duplicates insert exactly once") {
@@ -184,6 +210,76 @@ class StreamingSpec extends AnyFunSuite {
     // malformed sig and the null id are rejected; the far sig admits
     assert(spark.read.parquet(target).collect().map(_.getAs[String]("sig")).toSet ==
       Set(base, near, far))
+    // exact replay of both files through a FRESH checkpoint: every admitted
+    // signature is already in the target, so the replay inserts nothing
+    val replay = StreamingJobs.admitNearSink(src, hist, target,
+      Files.createTempDirectory("graft_anear_ck2").toString, "id", "sig")
+    replay.awaitTermination(); replay.stop()
+    val after = spark.read.parquet(target).collect().map(_.getAs[String]("sig"))
+    assert(after.length == 3 && after.toSet == Set(base, near, far),
+      s"replay re-admitted: ${after.toSeq}")
+  }
+
+  test("idempotentAppendSink: a key that is also a partition column keeps " +
+    "its string value (\"7\" vs \"07\"), and \"\" inserts once") {
+    import spark.implicits._
+    val target = Files.createTempDirectory("graft_sink_pkey").toString + "/t"
+    // ALL-numeric string partition values: partition-value inference would
+    // read them back as ints, so the sink reads the target schema-typed
+    def run(vs: Seq[String]): Unit =
+      drainAppend(vs.zipWithIndex.toDF("d", "v"), target, Seq("d"), Seq("d"))
+    run(Seq("7", "8", "100"))
+    assert(spark.read.parquet(target).count() == 3)
+    // replay + one new partition value: a string envelope ["100","8"]
+    // against an inference-typed int column would re-insert everything
+    run(Seq("7", "8", "100", "200"))
+    val got = spark.read.parquet(target)
+    assert(got.count() == 4, got.collect().mkString(","))
+    // "07" is a DIFFERENT key than "7", and its replay is blocked
+    run(Seq("7", "07"))
+    assert(spark.read.parquet(target).count() == 5)
+    run(Seq("07"))
+    assert(spark.read.parquet(target).count() == 5)
+    // partitionBy stores "" as the default partition (reads back NULL);
+    // the sink aligns the batch to that, so "" inserts ONCE and its
+    // replay is blocked instead of re-appending forever
+    run(Seq(""))
+    assert(spark.read.parquet(target).count() == 6)
+    run(Seq(""))
+    assert(spark.read.parquet(target).count() == 6)
+  }
+
+  test("idempotentAppendSink: an array key passes the envelope aggregate; " +
+    "null-safe dedup holds") {
+    import spark.implicits._
+    val target = Files.createTempDirectory("graft_sink_complex").toString + "/t"
+    def rows(ids: Seq[Option[Int]]): DataFrame =
+      ids.map(i => (i.map(v => Seq(s"a$v", s"b$v")), i.getOrElse(-1)))
+        .toDF("k", "v")
+    drainAppend(rows(Seq(Some(1), Some(2), None)), target)
+    // replay + one new key; the all-null key must not re-append (null-safe)
+    drainAppend(rows(Seq(Some(2), None, Some(3))), target)
+    assert(spark.read.parquet(target).count() == 4)
+    drainAppend(rows(Seq(Some(3), Some(4), None)), target)
+    assert(spark.read.parquet(target).count() == 5)
+  }
+
+  test("upsertSink: a target directory holding no data files merges as empty") {
+    import spark.implicits._
+    val in = Files.createTempDirectory("graft_ups0_in").toString
+    val target = Files.createTempDirectory("graft_ups0_tgt").toString + "/t"
+    // what external retention can leave behind: the directory and its
+    // `_SUCCESS` marker, no parquet file to infer a schema from
+    new java.io.File(target).mkdirs()
+    new java.io.File(target, "_SUCCESS").createNewFile()
+    val batch = Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "v", "seq")
+    batch.write.mode("overwrite").parquet(in)
+    val q = StreamingJobs.upsertSink(
+      spark.readStream.schema(batch.schema).parquet(in), target,
+      Seq("k"), Seq("v"), "seq", Files.createTempDirectory("graft_ups0_ck").toString)
+    q.awaitTermination(); q.stop()
+    assert(spark.read.parquet(target).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap == Map(1L -> "a", 2L -> "b"))
   }
 
   test("upsertSink: streaming MERGE — updates overwrite, replays are noops, last-in-batch wins") {
